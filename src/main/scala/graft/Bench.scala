@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /**
  * Benchmark main (driver contract): runs the headline queries on
  * `SPARK_GRAFT_SF_DIR` at `local[SPARK_GRAFT_CPUS]` and prints ONE
- * JSON line {"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}.
+ * JSON line {"metric":…,"value":N,"unit":"sec","queries":{…},
+ * "failed":[…],"sf":…}. A query that throws is listed under `failed`
+ * and its time is left out of `queries` and of the total.
  *
  * The two-cluster-size scaling criterion (BASELINE.json north_rule) is
  * evidenced by tools/scaling_bench.sh, which runs this same main at
@@ -14,10 +16,10 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
-  /** Queries excluded from the benchmark loop (none since
-    * dedup_jaccard's PPJoin prefix-filter rewrite; clump and flow
-    * accumulation returned earlier with their tiled rewrites). */
-  private val excluded = Set.empty[String]
+  /** Shuffle files under the local dirs above which the loop runs a
+    * full gc before the next query: dead shuffle files are deleted only
+    * once the cleaner sees their dependencies collected (CacheReaper). */
+  private val ReapShuffleBytes = 1L << 30
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -75,27 +77,31 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).collect {
-      case (name, fn) if !excluded.contains(name) &&
-          only.forall(_.contains(name)) =>
+      case (name, fn) if only.forall(_.contains(name)) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
+        val ok = try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        // reap with gc OUTSIDE the timed span: dead shuffle files on
-        // the tmpfs local dir otherwise accumulate across the 200+
-        // query loop and push the JVM into kernel reclaim, slowing
-        // the alphabetically-late queries 5-10x (see CacheReaper)
-        graft.core.CacheReaper.reapExcept(spark, inputIds, gc = true)
-        name -> dt
+        // untimed: unpersist the query's checkpoints, and gc only when
+        // dead shuffle files pile up on the tmpfs local dir — there
+        // they compete with the heap for RAM and slow the
+        // alphabetically-late queries 5-10x (see CacheReaper)
+        graft.core.CacheReaper.reapExcept(spark, inputIds,
+          gc = graft.core.CacheReaper.shuffleBytes(spark) > ReapShuffleBytes)
+        name -> Option.when(ok)(dt)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val pipSec = results.toMap.getOrElse("geo_pip_join", Double.NaN)
+    val total = timed.map(_._2).sum
+    val pipSec = timed.toMap.getOrElse("geo_pip_join", Double.NaN)
     val pps = if (pipSec > 0) pages / pipSec else -1.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pages":$pages,"pip_pages_per_sec":$pps,"cpus":$cpus}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","pages":$pages,"pip_pages_per_sec":$pps,"cpus":$cpus}"""
     println(line)
     // persist the full per-query map in-repo (the driver's archived
     // copy truncates long lines); never clobber it from a filtered run

@@ -19,6 +19,18 @@ object CacheReaper {
   def snapshot(spark: SparkSession): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** Bytes of shuffle files under the session's `spark.local.dir`
+    * roots. Files the cleaner deletes mid-walk count as gone. */
+  def shuffleBytes(spark: SparkSession): Long = {
+    def size(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles).fold(0L)(_.map(size).sum)
+      else if (f.getName.startsWith("shuffle_")) f.length
+      else 0L
+    spark.sparkContext.getConf
+      .get("spark.local.dir", System.getProperty("java.io.tmpdir"))
+      .split(",").map(d => size(new java.io.File(d.trim))).sum
+  }
+
   /** Unpersist every persisted RDD not in `keep`. Blocking by
     * default: a non-blocking reap between bench queries leaves the
     * previous query's blocks draining (and memory pressured) while

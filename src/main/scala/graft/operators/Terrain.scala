@@ -1,59 +1,96 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** One D8 cell with its decoded downstream target (self when sink). */
-case class FlowCell(r: Long, c: Long, tr: Long, tc: Long, sink: Boolean)
+/** A node of the weighted forest that [[Terrain.flowAccumD8]]
+  * accumulates: weight `w` at cell (r, c), linked downstream to
+  * (tr, tc) when `link` is set. A solved forest carries each node's
+  * accumulation in `w`. */
+case class FlowNode(r: Long, c: Long, tr: Long, tc: Long, link: Boolean,
+                    w: Long)
 
-/** Tile-pass output: an accumulation increment for cell (r, c) when
-  * `packet` is false, else a count packet arriving at cell (r, c) of
-  * another tile. */
-case class FlowOut(r: Long, c: Long, w: Long, packet: Boolean)
+/** Sequential kernels of the forest accumulation
+  * acc(n) = w(n) + sum of acc over n's in-links — the reference's
+  * recursive walk (FlowAccumD8.java:330-375) as one Kahn topological
+  * pass over a tile, or over a whole forest in one task. */
+object FlowForest {
 
-/** Sequential per-tile kernels for the tiled flow accumulation —
-  * the reference's recursive accumulation (FlowAccumD8.java:330-375)
-  * run inside one tile, with cross-tile flow exported as packets. */
-object FlowTiles {
+  def tileOf(r: Long, c: Long, t: Long): (Long, Long) =
+    (Math.floorDiv(r, t), Math.floorDiv(c, t))
 
-  private def index(cells: Seq[FlowCell])
-      : scala.collection.Map[(Long, Long), FlowCell] =
-    cells.iterator.map(f => (f.r, f.c) -> f).toMap
+  private def onBorder(f: FlowNode, t: Long): Boolean = {
+    val (i, j) = (Math.floorMod(f.r, t), Math.floorMod(f.c, t))
+    i == 0 || i == t - 1 || j == 0 || j == t - 1
+  }
 
-  private def inTile(r: Long, c: Long, tile: (Long, Long),
-                     t: Long): Boolean =
-    Math.floorDiv(r, t) == tile._1 && Math.floorDiv(c, t) == tile._2
-
-  /** Topological accumulation of unit loads within one tile. */
-  def localAccumulate(tile: (Long, Long), cells: Seq[FlowCell],
-                      ignored: Seq[FlowOut], t: Long): Iterator[FlowOut] = {
-    val m = index(cells)
-    val acc = scala.collection.mutable.Map.empty[(Long, Long), Long]
-      .withDefaultValue(0L)
-    val inDeg = scala.collection.mutable.Map.empty[(Long, Long), Int]
-      .withDefaultValue(0)
-    cells.foreach { f =>
-      if (!f.sink && inTile(f.tr, f.tc, tile, t))
-        inDeg((f.tr, f.tc)) += 1
-    }
-    val queue = scala.collection.mutable.Queue[FlowCell](
-      cells.filter(f => inDeg((f.r, f.c)) == 0): _*)
-    val out = scala.collection.mutable.ArrayBuffer[FlowOut]()
-    while (queue.nonEmpty) {
-      val u = queue.dequeue()
-      val a = acc((u.r, u.c)) + 1L
-      out += FlowOut(u.r, u.c, a, packet = false)
-      if (!u.sink) {
-        if (inTile(u.tr, u.tc, tile, t)) {
-          acc((u.tr, u.tc)) += a
-          inDeg((u.tr, u.tc)) -= 1
-          if (inDeg((u.tr, u.tc)) == 0) m.get((u.tr, u.tc))
-            .foreach(queue.enqueue(_))
-        } else out += FlowOut(u.tr, u.tc, a, packet = true)
+  /** Kahn accumulation over `nodes`, following only links whose target
+    * is one of `nodes`; `inflow` adds to a node's own weight. Returns
+    * the accumulations, each node's link-target index (-1 when none)
+    * and the visit order (upstream first). */
+  private def kahn(nodes: Array[FlowNode],
+                   inflow: scala.collection.Map[(Long, Long), Long])
+      : (Array[Long], Array[Int], Array[Int]) = {
+    val idx = scala.collection.mutable.HashMap.empty[(Long, Long), Int]
+    nodes.indices.foreach(i => idx((nodes(i).r, nodes(i).c)) = i)
+    val next = nodes.map(f =>
+      if (f.link) idx.getOrElse((f.tr, f.tc), -1) else -1)
+    val indeg = new Array[Int](nodes.length)
+    next.foreach(t => if (t >= 0) indeg(t) += 1)
+    val acc = nodes.map(f => f.w + inflow.getOrElse((f.r, f.c), 0L))
+    val order = nodes.indices.filter(indeg(_) == 0).toBuffer // FIFO
+    var head = 0
+    while (head < order.length) {
+      val i = order(head)
+      head += 1
+      val t = next(i)
+      if (t >= 0) {
+        acc(t) += acc(i)
+        indeg(t) -= 1
+        if (indeg(t) == 0) order += t
       }
     }
-    out.iterator
+    (acc, next, order.toArray)
   }
+
+  /** Every node of `nodes`, once, with its accumulation; `seeds` are
+    * inflows (target r, target c, amount) from outside the set. */
+  def accumulate(nodes: Array[FlowNode],
+                 seeds: Iterator[(Long, Long, Long)]): Iterator[FlowNode] = {
+    val inflow = seeds.toSeq.groupMapReduce(s => (s._1, s._2))(_._3)(_ + _)
+    val (acc, _, _) = kahn(nodes, inflow)
+    nodes.indices.iterator.map(i => nodes(i).copy(w = acc(i)))
+  }
+
+  /** The perimeter forest of one tile of side `t`. An exit node (its
+    * link leaves the tile) keeps that link, weighted by its tile-local
+    * accumulation. Any other border node links with weight 0 to the
+    * exit its in-tile path reaches; it is dropped when that path ends
+    * inside the tile, as inflow there never leaves. Interior nodes are
+    * dropped: a cross-tile link joins D8 neighbours, so only border
+    * nodes can receive one. */
+  def perimeter(tile: (Long, Long), nodes: Array[FlowNode],
+                t: Long): Iterator[FlowNode] = {
+    def leaves(f: FlowNode) = f.link && tileOf(f.tr, f.tc, t) != tile
+    val (acc, next, order) = kahn(nodes, Map.empty)
+    val exit = Array.fill(nodes.length)(-1)
+    order.reverseIterator.foreach { i =>
+      exit(i) = if (leaves(nodes(i))) i
+                else if (next(i) >= 0) exit(next(i)) else -1
+    }
+    nodes.indices.iterator
+      .filter(i => exit(i) >= 0 && onBorder(nodes(i), t))
+      .map { i =>
+        val (f, e) = (nodes(i), nodes(exit(i)))
+        if (exit(i) == i) f.copy(w = acc(i))
+        else FlowNode(f.r, f.c, e.r, e.c, link = true, w = 0L)
+      }
+  }
+}
+
+/** Sequential per-tile kernels of the tiled priority-flood and
+  * cost-distance fixpoints. */
+object FlowTiles {
 
   /**
    * One tile's Wang & Liu priority flood, seeded by the tile's
@@ -189,31 +226,6 @@ object FlowTiles {
       }
       dests.foreach { dt =>
         out += ((dt._1, dt._2, r, c, lvl, cost((r, c)), src))
-      }
-    }
-    out.iterator
-  }
-
-  /** Walk arriving packets through the tile in one pass, adding their
-    * weight to every cell on the within-tile path segment. */
-  def localWalk(tile: (Long, Long), cells: Seq[FlowCell],
-                packets: Seq[FlowOut], t: Long): Iterator[FlowOut] = {
-    val m = index(cells)
-    val out = scala.collection.mutable.ArrayBuffer[FlowOut]()
-    packets.foreach { p =>
-      var cur = m.get((p.r, p.c))
-      var continue = cur.isDefined
-      while (continue) {
-        val u = cur.get
-        out += FlowOut(u.r, u.c, p.w, packet = false)
-        if (u.sink) continue = false
-        else if (inTile(u.tr, u.tc, tile, t)) {
-          cur = m.get((u.tr, u.tc))
-          continue = cur.isDefined
-        } else {
-          out += FlowOut(u.tr, u.tc, p.w, packet = true)
-          continue = false
-        }
       }
     }
     out.iterator
@@ -552,24 +564,41 @@ object Terrain {
    * cells draining through each cell (itself included), accumulated
    * along the D8 pointer DAG.
    *
-   * Scale design — tile-local topological accumulation + boundary
-   * packet exchange: the grid is tiled (`tileSize`^2 cells); one
-   * `cogroup` pass runs the reference's recursive accumulation
-   * SEQUENTIALLY inside each tile (cheap, in-memory) and emits a
-   * "packet" wherever a flowpath crosses a tile edge; subsequent
-   * rounds inject arriving packets and walk them through the tile in
-   * one hop. Rounds scale with TILE crossings of the longest
-   * flowpath, not its cell length — a 10^4-cell mainstem needs
-   * ~10^4/tileSize rounds instead of 10^4, and every round touches
-   * only boundary packets. Per-cell increments are unioned and summed
-   * once at the end.
+   * Scale design — recursive perimeter-graph contraction (Barnes 2017,
+   * "Parallel non-divergent flow accumulation for trillion cell
+   * digital elevation models"). The pointer grid is a forest with unit
+   * weights, and acc(n) = w(n) + sum of acc over n's in-links is
+   * solved in three stages over tiles of side T = `tileSize`:
+   *  1. one tile pass runs a local Kahn and emits each tile's
+   *     perimeter forest: exit cells keep their cross-tile link,
+   *     weighted by the tile-local accumulation; other border cells
+   *     link with weight 0 to the exit their in-tile path reaches;
+   *  2. the perimeter forest is solved by the same recursion with
+   *     tile side T^2. Tiles nest, and a link that crosses a T^2 tile
+   *     is an original D8 link, so its ends lie on the T^2 border;
+   *  3. one cogroup pass reruns each tile's Kahn with the solved
+   *     cross-tile inflows as seeds, emitting every cell once.
+   * The base case is one task over the whole forest, taken when the
+   * forest has at most [[localFixpointMaxRows]] nodes or fits in one
+   * tile. Level k + 1 holds at most (4T - 4) nodes per level-k tile,
+   * a bound taken from the extent of the top level (one aggregate
+   * job), so the number of Spark jobs depends only on the number of
+   * levels — one per squaring of T until a tile covers the grid —
+   * and not on how many tiles a flowpath crosses.
    */
-  def flowAccumD8(grid: DataFrame, tileSize: Int = 16): DataFrame =
+  def flowAccumD8(grid: DataFrame, tileSize: Int = 16): DataFrame = {
+    require(tileSize >= 2,
+      s"flowAccumD8 needs tileSize >= 2 (tiles grow T -> T^2 per " +
+        s"level), got $tileSize")
     graft.core.Memo.cached(
       graft.core.Memo.key(grid, s"flowAccumD8:$tileSize"),
       grid.sparkSession) { flowAccumD8Impl(grid, tileSize) }
+  }
 
-  private def flowAccumD8Impl(grid: DataFrame, tileSize: Int): DataFrame = {
+  /** [[flowAccumD8]] without the memo, so that tests can run both arms
+    * on one grid. */
+  private[graft] def flowAccumD8Impl(grid: DataFrame,
+                                     tileSize: Int): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
     val ptr = d8Pointer(grid)
@@ -579,80 +608,46 @@ object Terrain {
     val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
       when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
     }
-    val cells = ptr.select(col("r"), col("c"),
-        (col("r") + dyExpr).as("tr"), (col("c") + dxExpr).as("tc"),
-        (col("ptr") === 0).as("sink"))
-      .as[(Long, Long, Long, Long, Boolean)]
-      .map { case (r, c, tr, tc, sink) => FlowCell(r, c, tr, tc, sink) }
-      .localCheckpoint(true)
+    val cells = ptr.select(col("r").cast("long").as("r"),
+        col("c").cast("long").as("c"),
+        (col("r") + dyExpr).cast("long").as("tr"),
+        (col("c") + dxExpr).cast("long").as("tc"),
+        (col("ptr") =!= 0).as("link"), lit(1L).as("w"))
+      .as[FlowNode]
+    val ext = cells.agg(count(lit(1)), min("r"), max("r"), min("c"),
+      max("c")).head()
+    val n = ext.getLong(0)
+    val extent = if (n == 0) (0L, 0L, 0L, 0L)
+      else (ext.getLong(1), ext.getLong(2), ext.getLong(3), ext.getLong(4))
+    accumulateForest(cells, n, extent, tileSize.toLong)
+      .map(f => (f.r, f.c, f.w)).toDF("r", "c", "n_upslope")
+  }
 
-    // Size-adaptive: integer counts accumulate exactly in any order,
-    // so a small grid runs one-task Kahn topological accumulation
-    // instead of the tiled packet rounds (identical output).
-    if (cells.count() <= localFixpointMaxRows) {
-      return cells.coalesce(1).mapPartitions { it =>
-        val arr = it.toArray
-        val n = arr.length
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        arr.zipWithIndex.foreach { case (f, i) => idx((f.r, f.c)) = i }
-        val nxt = arr.map { f =>
-          if (f.sink) -1
-          else idx.getOrElse((f.tr, f.tc), -1)
-        }
-        val indeg = new Array[Int](n)
-        nxt.foreach(t => if (t >= 0) indeg(t) += 1)
-        val acc = Array.fill(n)(1L)
-        val stack = new scala.collection.mutable.ArrayDeque[Int]
-        for (i <- 0 until n) if (indeg(i) == 0) stack.append(i)
-        while (stack.nonEmpty) {
-          val i = stack.removeLast()
-          val t = nxt(i)
-          if (t >= 0) {
-            acc(t) += acc(i)
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.append(t)
-          }
-        }
-        arr.indices.iterator.map(i => (arr(i).r, arr(i).c, acc(i)))
-      }.toDF("r", "c", "n_upslope")
+  /** The accumulation of every node of the forest `nodes`, which has at
+    * most `bound` nodes inside `extent` (min r, max r, min c, max c),
+    * contracted over tiles of side `t` (see [[flowAccumD8]]). */
+  private def accumulateForest(nodes: Dataset[FlowNode], bound: Long,
+                               extent: (Long, Long, Long, Long),
+                               t: Long): Dataset[FlowNode] = {
+    import nodes.sparkSession.implicits._
+    val (minR, maxR, minC, maxC) = extent
+    val tiles = (Math.floorDiv(maxR, t) - Math.floorDiv(minR, t) + 1) *
+      (Math.floorDiv(maxC, t) - Math.floorDiv(minC, t) + 1)
+    if (bound <= localFixpointMaxRows || tiles == 1)
+      return nodes.coalesce(1).mapPartitions(it =>
+        FlowForest.accumulate(it.toArray, Iterator.empty))
+    val byTile = nodes.groupByKey(f => FlowForest.tileOf(f.r, f.c, t))
+    val perimeter = byTile.flatMapGroups((tile, it) =>
+      FlowForest.perimeter(tile, it.toArray, t))
+    val solved = accumulateForest(perimeter,
+      math.min(bound, tiles * (4 * t - 4)), extent, Math.multiplyExact(t, t))
+    val seeds = solved
+      .filter(f => f.link &&
+        FlowForest.tileOf(f.tr, f.tc, t) != FlowForest.tileOf(f.r, f.c, t))
+      .map(f => (f.tr, f.tc, f.w))
+    byTile.cogroup(seeds.groupByKey(s => FlowForest.tileOf(s._1, s._2, t))) {
+      (_, it, in) => FlowForest.accumulate(it.toArray, in)
     }
-
-    val T = tileSize.toLong
-    def tileOf(r: Long, c: Long): (Long, Long) =
-      (Math.floorDiv(r, T), Math.floorDiv(c, T))
-    val byTile = cells.groupByKey(f => tileOf(f.r, f.c))
-
-    // round 0: every cell is a source (load 1)
-    val outputs = byTile.flatMapGroups { (tile, it) =>
-      FlowTiles.localAccumulate(tile, it.toSeq, Seq.empty, T)
-    }.localCheckpoint(true)
-    // each round's increments are already materialized via the
-    // checkpoint of `next`; collecting them in a buffer and unioning
-    // ONCE at the end avoids re-copying the whole accumulated set
-    // every round (the old per-round union checkpoint was O(rounds^2))
-    val incrementParts =
-      scala.collection.mutable.ArrayBuffer(outputs.filter(!_.packet))
-    var packets = outputs.filter(_.packet)
-    var nPackets = packets.count()
-    while (nPackets > 0) {
-      // consolidate packets per destination cell before the walk
-      val consolidated = packets
-        .groupByKey(p => (p.r, p.c))
-        .mapGroups((k: (Long, Long), it: Iterator[FlowOut]) =>
-          FlowOut(k._1, k._2, it.map(_.w).sum, packet = true))
-      val next = byTile.cogroup(
-        consolidated.groupByKey(p => tileOf(p.r, p.c))) {
-          (tile, cellIt, pktIt) =>
-            FlowTiles.localWalk(tile, cellIt.toSeq, pktIt.toSeq, T)
-        }.localCheckpoint(true)
-      incrementParts += next.filter(!_.packet)
-      packets = next.filter(_.packet)
-      nPackets = packets.count()
-    }
-    incrementParts.reduce(_ union _).groupByKey(o => (o.r, o.c))
-      .mapGroups((k: (Long, Long), it: Iterator[FlowOut]) =>
-        (k._1, k._2, it.map(_.w).sum))
-      .toDF("r", "c", "n_upslope")
   }
 
   /**
@@ -890,9 +885,9 @@ object Terrain {
    * doubles recompute), so any rounds >= longest-path-length yield the
    * fixpoint. The whole loop is lazy (one job at the end); lineage is
    * truncated every few rounds. At cluster scale each round is one
-   * shuffle of the cell relation — for deep flowpaths prefer the
-   * packet-tiled D8 scheme's generalisation; this form is chosen for
-   * its deterministic summation order.
+   * shuffle of the cell relation — for deep flowpaths prefer a
+   * generalisation of flowAccumD8's perimeter contraction; this form
+   * is chosen for its deterministic summation order.
    */
   def dinfAccum(grid: DataFrame, rounds: Int = 24): DataFrame =
     weightedAccum(dinfEdges(grid), grid, rounds)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,24 +19,95 @@ class FixpointSpec extends AnyFunSuite {
       yield (r, c, ((r * nC + c) * 37 % 1000).toDouble / 10.0))
       .toDF("r", "c", "v")
 
-  private def both(run: () => Map[(Long, Long), Any]): Unit = {
+  private def withMaxRows[T](maxRows: Long)(body: => T): T = {
     val saved = Terrain.localFixpointMaxRows
-    try {
-      Terrain.localFixpointMaxRows = Long.MaxValue
-      val local = run()
-      Terrain.localFixpointMaxRows = 0L
-      val dist = run()
-      assert(local.keySet == dist.keySet)
-      local.foreach { case (k, v) =>
-        assert(v == dist(k), s"cell $k: local=$v dist=${dist(k)}")
-      }
-    } finally Terrain.localFixpointMaxRows = saved
+    Terrain.localFixpointMaxRows = maxRows
+    try body finally Terrain.localFixpointMaxRows = saved
   }
 
-  test("flow accumulation: local Kahn == tiled packet rounds") {
+  private def both(run: () => Map[(Long, Long), Any]): Unit = {
+    val local = withMaxRows(Long.MaxValue)(run())
+    val dist = withMaxRows(0L)(run())
+    assert(local.keySet == dist.keySet)
+    local.foreach { case (k, v) =>
+      assert(v == dist(k), s"cell $k: local=$v dist=${dist(k)}")
+    }
+  }
+
+  /** Flow accumulation by cell. `flowAccumD8Impl` skips the memo,
+    * which would serve a second arm on the same grid the first arm's
+    * result. */
+  private def flowAccum(g: DataFrame, tileSize: Int = 16) =
+    Terrain.flowAccumD8Impl(g, tileSize).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
+
+  private def assertSameAccum(got: Map[(Long, Long), Long],
+                              want: Map[(Long, Long), Long],
+                              what: String): Unit = {
+    val bad = (got.keySet ++ want.keySet).filter(k => got.get(k) != want.get(k))
+    if (bad.nonEmpty) fail(s"$what: ${bad.size} cells differ, e.g. " +
+      bad.take(3).map(k => s"$k got ${got.get(k)} want ${want.get(k)}"))
+  }
+
+  /** A plane falling to the north-west: every pointer is diagonal
+    * (slope 1.8 / sqrt 2 beats 1 and 0.8) until the top row or the left
+    * column, so the whole grid drains to (0, 0) along a diagonal
+    * mainstem, and cell (k, k), k >= 1, drains side - k cells. */
+  private def tilted(side: Long) =
+    (for (r <- 0L until side; c <- 0L until side)
+      yield (r, c, r + 0.8 * c)).toDF("r", "c", "v")
+
+  /** Seeded rough relief with nodata holes (missing cells): a random
+    * scatter plus a rectangular lake. */
+  private def holeyDem(nR: Int, nC: Int, seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    (for (r <- 0 until nR; c <- 0 until nC) yield {
+      val v = 30 * math.sin(r / 9.0) * math.cos(c / 13.0) +
+        0.05 * (r + c) + rnd.nextDouble()
+      val hole = rnd.nextInt(23) == 0 ||
+        (r >= 40 && r < 52 && c >= 60 && c < 75)
+      (r.toLong, c.toLong, v, hole)
+    }).collect { case (r, c, v, false) => (r, c, v) }.toDF("r", "c", "v")
+  }
+
+  test("flow accumulation: local Kahn == perimeter-graph contraction") {
     val g = hashGrid(20, 25)
-    both(() => Terrain.flowAccumD8(g).collect()
-      .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap)
+    both(() => flowAccum(g))
+  }
+
+  test("flow accumulation: contraction == local Kahn on a DEM with holes") {
+    // 97 x 131 is a multiple of no tile size; side 2 contracts three
+    // times (T = 2, 4, 16), side 200 covers the grid with one tile
+    val g = holeyDem(97, 131, seed = 7)
+    val local = withMaxRows(Long.MaxValue)(flowAccum(g))
+    for (t <- Seq(2, 3, 5, 16, 200))
+      assertSameAccum(withMaxRows(0L)(flowAccum(g, t)), local, s"tile $t")
+  }
+
+  test("flow accumulation: a mainstem across 10 tiles drains the grid") {
+    val g = tilted(40)
+    val dist = withMaxRows(0L)(flowAccum(g, 4))
+    assert(dist((0L, 0L)) == 1600L)
+    (1L until 40L).foreach(k => assert(dist((k, k)) == 40L - k, s"cell $k"))
+    assertSameAccum(dist, withMaxRows(Long.MaxValue)(flowAccum(g)), "tilted")
+  }
+
+  test("flow accumulation: tile side below 2 is rejected") {
+    intercept[IllegalArgumentException](
+      Terrain.flowAccumD8(tilted(8), tileSize = 1))
+  }
+
+  test("flow accumulation: Spark jobs follow levels, not flowpath length") {
+    // at tile side 4 both grids contract at T = 4 and T = 16 and reach
+    // the base case at T = 256; their mainstems cross 10 and 15 tiles
+    val jobs = Seq(40L, 60L).map { side =>
+      val g = tilted(side)
+      Terrain.d8Pointer(g).count() // memoized: its jobs stay uncounted
+      withMaxRows(0L)(JobCount(spark.sparkContext) {
+        Terrain.flowAccumD8Impl(g, 4).count()
+      })
+    }
+    assert(jobs.head == jobs.last, s"jobs per grid side 40, 60: $jobs")
   }
 
   test("watershed: local chase == distributed doubling") {
