@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.SparkSession
 
 /**
  * Benchmark main (driver contract): runs the headline queries on
  * `SPARK_GRAFT_SF_DIR` at `local[SPARK_GRAFT_CPUS]` and prints ONE
  * JSON line {"metric":…,"value":N,"unit":"sec","queries":{…},
- * "failed":[…],"sf":…}. A query that throws is listed under `failed`
- * and its time is left out of `queries` and of the total.
+ * "failed":[…],"jobs":{…},"total_jobs":N,"sf":…}. A query that
+ * throws is listed under `failed` and its time is left out of
+ * `queries` and of the total. `jobs` holds the Spark jobs each query
+ * started, building its DataFrame included, failed queries too;
+ * `total_jobs` is their sum.
  *
  * The two-cluster-size scaling criterion (BASELINE.json north_rule) is
  * evidenced by tools/scaling_bench.sh, which runs this same main at
@@ -78,30 +82,37 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).collect {
       case (name, fn) if only.forall(_.contains(name)) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
+        // the timed span excludes JobCount's listener-bus drains
+        var dt = Option.empty[Double]
+        val jobs = JobCount(spark.sparkContext) {
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).count()
+            dt = Some((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          }
         }
-        val dt = (System.nanoTime() - t0) / 1e9
         // untimed: unpersist the query's checkpoints, and gc only when
         // dead shuffle files pile up on the tmpfs local dir — there
         // they compete with the heap for RAM and slow the
         // alphabetically-late queries 5-10x (see CacheReaper)
         graft.core.CacheReaper.reapExcept(spark, inputIds,
           gc = graft.core.CacheReaper.shuffleBytes(spark) > ReapShuffleBytes)
-        name -> Option.when(ok)(dt)
+        (name, dt, jobs)
     }
-    val timed = results.collect { case (k, Some(v)) => k -> v }
-    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
+    val timed = results.collect { case (k, Some(v), _) => k -> v }
+    val failed = results.collect { case (k, None, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val jobsJson = results.map { case (k, _, j) => s"\"" + k + "\":" + j }
+      .mkString("{", ",", "}")
+    val totalJobs = results.map(_._3).sum
     val total = timed.map(_._2).sum
     val pipSec = timed.toMap.getOrElse("geo_pip_join", Double.NaN)
     val pps = if (pipSec > 0) pages / pipSec else -1.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","pages":$pages,"pip_pages_per_sec":$pps,"cpus":$cpus}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"jobs":$jobsJson,"total_jobs":$totalJobs,"sf":"$sfDir","pages":$pages,"pip_pages_per_sec":$pps,"cpus":$cpus}"""
     println(line)
     // persist the full per-query map in-repo (the driver's archived
     // copy truncates long lines); never clobber it from a filtered run

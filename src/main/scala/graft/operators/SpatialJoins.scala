@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -152,12 +153,22 @@ object SpatialJoins extends Serializable {
     * force the iterative-deepening path. */
   private[graft] var broadcastKnnMaxBuildRows: Long = 200000L
 
+  /** Planner row estimate of `df`, read without a job: the optimizer's
+    * row count when it has one, else its size estimate over the row
+    * width. BigInt, because an unknown size is Long.MaxValue bytes. */
+  private[graft] def estimatedRows(df: DataFrame): BigInt = {
+    val plan = df.queryExecution.optimizedPlan
+    plan.stats.rowCount.getOrElse(
+      plan.stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+  }
+
   /**
    * Broadcast-kNN: when the build side fits in executor memory, the
    * whole join is ONE map-side pass — a balanced kd-tree is built
-   * once from the collected build points, broadcast, and every probe
-   * partition streams through it independently (no candidate
-   * shuffle, no rounds; probe-side parallelism is unbounded). This is
+   * once from the collected build points (id, x, y), broadcast, and
+   * every probe partition streams through it independently (no
+   * candidate shuffle, no rounds; probe-side parallelism is
+   * unbounded). This is
    * the plan a 1000-executor cluster wants whenever the build side is
    * a gazetteer-scale dimension — the literal distributed form of the
    * reference's KdTree.nearestNeighbor (KdTree.java:339-430).
@@ -165,13 +176,12 @@ object SpatialJoins extends Serializable {
    * (dist2, buildId), dist2 = dx·dx + dy·dy in the same operation
    * order as the Column form.
    */
-  private def knnJoinBroadcast(probe: DataFrame, build: DataFrame,
-      kNeighbors: Int, probeId: String, buildId: String,
-      px: String, py: String, bx: String, by: String): DataFrame = {
+  private def knnJoinBroadcast(probe: DataFrame,
+      pts: Array[(Long, Double, Double)], kNeighbors: Int,
+      probeId: String, buildId: String, px: String, py: String)
+      : DataFrame = {
     val spark = probe.sparkSession
     import spark.implicits._
-    val pts = build.select(col(buildId), col(bx), col(by))
-      .as[(Long, Double, Double)].collect()
     val n = pts.length
     val ids = new Array[Long](n)
     val xs = new Array[Double](n)
@@ -263,21 +273,30 @@ object SpatialJoins extends Serializable {
               px: String = "x", py: String = "y",
               bx: String = "rx", by: String = "ry",
               k0: Int = 2): DataFrame = {
+    val spark = probe.sparkSession
+    import spark.implicits._
+    val keyed = build.select(col(buildId), col(bx), col(by))
+    // Size-adaptive plan choice (the AQE pattern): a build side that
+    // fits in memory takes the shuffle-free broadcast kd-tree plan —
+    // exact same output, one map-side job instead of deepening rounds.
+    // The planner's size estimate picks the arm without a job; the
+    // broadcast arm's one collect then checks the exact row bound and
+    // hands a build side above it to the deepening rounds.
+    if (estimatedRows(keyed) <= broadcastKnnMaxBuildRows) {
+      val pts = keyed.as[(Long, Double, Double)].collect()
+      if (pts.length <= broadcastKnnMaxBuildRows)
+        return knnJoinBroadcast(probe, pts, kNeighbors, probeId, buildId,
+          px, py)
+    }
     // Materialise the keyed build side once (inheriting the input's
     // partitioning — a repartition here would add a full extra
     // shuffle+write of the big side that does not parallelise);
     // every deepening round re-joins against a cheap parent-cell
     // projection of it instead of re-scanning the build table.
-    val b = build.select(col(buildId), col(bx), col(by))
+    val b = keyed
       .withColumn("__cellF",
         latlng_to_cell(col(by), col(bx), lit(CellIndex.DefaultRes)))
       .localCheckpoint(true)
-    // Size-adaptive plan choice (the AQE pattern): a build side that
-    // fits in memory takes the shuffle-free broadcast kd-tree plan —
-    // exact same output, one map-side job instead of deepening rounds.
-    if (b.count() <= broadcastKnnMaxBuildRows)
-      return knnJoinBroadcast(probe, b, kNeighbors, probeId, buildId,
-        px, py, bx, by)
     val res =
       if (res0 > 0) res0
       else {

@@ -1285,7 +1285,8 @@ object Terrain {
    * assumption. Emits one row per surviving (cell, pass, k):
    * (r, c, v, pass, k, dist, z1, z2, z).
    *
-   * Executed as cells x step-range with two bounded joins back to
+   * Executed as cells x step-range (steps capped at ceil(maxDist)
+   * cells when finite) with two bounded joins back to
    * the grid — O(N*K) like the reference's own walk, but shuffled
    * once and embarrassingly parallel over cells.
    */
@@ -1302,9 +1303,15 @@ object Terrain {
     val g2 = grid.select(col("r").as("jr2"), col("c").as("jc2"),
       col("v").as("z2r"))
     val yI = -col("r").cast("double") - lit(ls) * col("c")
+    // Step k lies at least k cells from its cell, so every step past
+    // ceil(maxDist) is bad: capping the range there, before the cross
+    // join, leaves the surviving prefix (k < first bad k) unchanged.
+    val stepCap =
+      if (useMax && !maxDist.isNaN) math.max(0L, math.ceil(maxDist).toLong)
+      else Long.MaxValue
 
     // pass 0: vertical intersections
-    val k0 = spark.range(1, nCols + 1).toDF("k")
+    val k0 = spark.range(1, math.min(nCols, stepCap) + 1).toDF("k")
     val xD0 = (col("c") + col("k") * xs).cast("double")
     val v0 = cells.crossJoin(broadcast(k0))
       .withColumn("xD", xD0)
@@ -1329,7 +1336,7 @@ object Terrain {
     // — i.e. the pass contributes nothing. ANSI mode errors on the
     // double division instead, so the ls == 0 case short-circuits to
     // an all-bad pass with a dummy x.
-    val k1 = spark.range(1, nRows + 1).toDF("k")
+    val k1 = spark.range(1, math.min(nRows, stepCap) + 1).toDF("k")
     val yH = (-col("r") + col("k") * ys).cast("double")
     val xD1 = if (ls == 0.0) lit(0.0) else (yH - yI) / lit(ls)
     val h0 = cells.crossJoin(broadcast(k1))
@@ -3876,25 +3883,27 @@ object Terrain {
    * (z, row, col) (whitebox.structures.GridCell.compareTo), so the
    * sequence is well-defined — but it is inherently sequential (each
    * pop depends on the global frontier), so like the reference the
-   * operator runs as one task over the grid, gated loudly by
-   * [[localFixpointMaxRows]]. Unvisited-but-present cells keep order
-   * 0 (the reference's floodOrder array default); the first pop is
-   * also 0, mirroring the reference exactly.
+   * operator runs as one task over the grid. That task fails with a
+   * message when the grid has more than [[localFixpointMaxRows]]
+   * cells; no job runs before it to count them. Unvisited-but-present
+   * cells keep order 0 (the reference's floodOrder array default); the
+   * first pop is also 0, mirroring the reference exactly.
    */
   def floodOrder(grid: DataFrame): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
     val cells = grid.select(col("r"), col("c"), col("v"))
-      .as[(Long, Long, Double)].localCheckpoint(true)
-    require(cells.count() <= localFixpointMaxRows,
-      s"floodOrder runs the reference's sequential priority flood in " +
-        s"one task; grid exceeds localFixpointMaxRows=" +
-        s"$localFixpointMaxRows — revisit with a tile-parallel " +
-        s"variant before using at this scale")
+      .as[(Long, Long, Double)]
     val dYl = dY.toArray
     val dXl = dX.toArray
+    val maxRows = localFixpointMaxRows
     cells.coalesce(1).mapPartitions { it =>
       val rows = it.toArray
+      require(rows.length <= maxRows,
+        s"floodOrder runs the reference's sequential priority flood in " +
+          s"one task; grid exceeds localFixpointMaxRows=" +
+          s"$maxRows — revisit with a tile-parallel " +
+          s"variant before using at this scale")
       val z = new scala.collection.mutable.HashMap[(Long, Long), Double]
       rows.foreach { case (r, c, v) => z((r, c)) = v }
       // seeds: pits (no present neighbour lower) touching an absent
@@ -3956,8 +3965,9 @@ object Terrain {
    * heap tie behaviour matches), lowering path cells to
    * previousZ - aSmallValue. Later pits see earlier carvings — the
    * tool is SEQUENTIAL BY CONSTRUCTION (the reference is too), so it
-   * runs as one task over the grid, gated loudly by
-   * [[localFixpointMaxRows]]; at true raster scale the reference's
+   * runs as one task over the grid, which fails with a message when
+   * the grid has more than [[localFixpointMaxRows]] cells (no job runs
+   * before it to count them); at true raster scale the reference's
    * own recommendation is tile-wise processing (FastBreach-
    * Depressions.groovy), which composes with the engine's tile
    * machinery if ever needed above the bound. aSmallValue buckets
@@ -3978,18 +3988,19 @@ object Terrain {
     val spark = grid.sparkSession
     import spark.implicits._
     val cells = grid.select(col("r"), col("c"), col("v"))
-      .as[(Long, Long, Double)].localCheckpoint(true)
-    require(cells.count() <= localFixpointMaxRows,
-      s"breachDepressions mirrors the reference's sequential pit-by-" +
-        s"pit carving in one task; grid exceeds localFixpointMaxRows=" +
-        s"$localFixpointMaxRows — use the tile-parallel fill/breach " +
-        s"composition at this scale")
+      .as[(Long, Long, Double)]
     val dYl = dY.toArray
     val dXl = dX.toArray
     val (nr, nc) = (nRows, nCols)
     val k = maxDist
+    val maxRows = localFixpointMaxRows
     cells.coalesce(1).mapPartitions { it =>
       val rows = it.toArray
+      require(rows.length <= maxRows,
+        s"breachDepressions mirrors the reference's sequential pit-by-" +
+          s"pit carving in one task; grid exceeds localFixpointMaxRows=" +
+          s"$maxRows — use the tile-parallel fill/breach " +
+          s"composition at this scale")
       val z = new scala.collection.mutable.HashMap[(Long, Long), Double]
       rows.foreach { case (r, c, v) => z((r, c)) = v }
       // abs of the MAX (BreachDepressions.java:275), not max of abs

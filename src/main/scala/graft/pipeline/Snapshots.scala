@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetFooter
+
 /**
  * Iceberg-style snapshot/manifest layer over partitioned Parquet
  * (SURVEY.md §7.1 module 4/9): no Iceberg jar ships in this
@@ -66,6 +68,17 @@ object Snapshots {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Parquet files a write left in a part directory (not its
+    * `_SUCCESS` marker or hidden checksum files). */
+  private def dataFiles(dir: String): Seq[Path] = {
+    val p = Paths.get(dir)
+    if (!Files.isDirectory(p)) Seq.empty
+    else Files.list(p).iterator().asScala.filter { f =>
+      val n = f.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".") && Files.isRegularFile(f)
+    }.toSeq.sortBy(_.getFileName.toString)
+  }
+
   private def dirBytes(p: Path): Long =
     if (!Files.exists(p)) 0L
     else Files.walk(p).iterator().asScala
@@ -81,9 +94,10 @@ object Snapshots {
    * Scale shape: ONE Spark job writes every remaining bucket via
    * `partitionBy` with dynamic partition overwrite (a single scan of
    * the input, one writer task set), then manifests are committed
-   * from the landed files — parquet-footer row counts, no data
-   * re-read. The previous per-bucket loop cost numParts full input
-   * scans; at 100 TB one snapshot write would have cost N x input.
+   * from the landed files — parquet-footer row counts read on the
+   * driver, no data re-read and no job. The previous per-bucket loop
+   * cost numParts full input scans; at 100 TB one snapshot write
+   * would have cost N x input.
    */
   def writeSnapshot(df: DataFrame, root: String, stage: String,
                     snapshotId: Long, bucketCol: String,
@@ -110,19 +124,13 @@ object Snapshots {
         .partitionBy("part")
         .parquet(base)
     }
-    // manifest row counts from the landed files' parquet footers
-    // (count() over a parquet scan is metadata-only), one small job
-    val landed = todo.map(k => k -> dataDir(root, stage, snapshotId, k))
-      .filter { case (_, p) => Files.exists(Paths.get(p)) }
-    val countsByPart: Map[Int, Long] =
-      if (landed.isEmpty) Map.empty
-      else spark.read.option("basePath", base)
-        .parquet(landed.map(_._2): _*)
-        .groupBy(col("part")).count()
-        .collect().map(r => r.get(0).toString.toInt -> r.getLong(1)).toMap
+    // manifest row counts from the landed files' parquet footers, read
+    // on the driver: no job (a part with no rows has no directory)
     val metas = todo.map { k =>
-      val meta = PartMeta(k, countsByPart.getOrElse(k, 0L),
-        dirBytes(Paths.get(dataDir(root, stage, snapshotId, k))))
+      val dir = dataDir(root, stage, snapshotId, k)
+      val rows = dataFiles(dir)
+        .map(f => ParquetFooter.meta(spark, f.toString).rows).sum
+      val meta = PartMeta(k, rows, dirBytes(Paths.get(dir)))
       commitPart(root, stage, snapshotId, meta)
       meta
     }
@@ -144,8 +152,22 @@ object Snapshots {
     Files.exists(manifestDir(root, stage, snapshotId)
       .resolve("_SUCCESS.json"))
 
-  /** Read a sealed snapshot back. */
+  /** Read a sealed snapshot back: the part directories its manifest
+    * lists, with the schema from a data file's footer. Building the
+    * frame starts no job and lists no directory the manifest does not
+    * name. Each directory is read as its own root, so `part` is not a
+    * column. */
   def readSnapshot(spark: SparkSession, root: String, stage: String,
-                   snapshotId: Long): DataFrame =
-    spark.read.parquet(s"$root/$stage/$snapshotId/part=*")
+                   snapshotId: Long): DataFrame = {
+    require(isSealed(root, stage, snapshotId),
+      s"snapshot $snapshotId of $stage under $root is not sealed")
+    val dirs = completedParts(root, stage, snapshotId).toSeq.sorted
+      .map(dataDir(root, stage, snapshotId, _))
+      .filter(d => Files.exists(Paths.get(d)))
+    val file = dirs.iterator.flatMap(dataFiles).nextOption().getOrElse(
+      throw new IllegalStateException(
+        s"snapshot $snapshotId of $stage under $root has no data file"))
+    spark.read.schema(ParquetFooter.schema(spark, file.toString))
+      .parquet(dirs: _*)
+  }
 }

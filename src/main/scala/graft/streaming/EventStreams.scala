@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.ParquetFooter
+
 /**
  * Structured Streaming surface. The reference has no streaming at all
  * (SURVEY.md §2.11) — every tool is a batch file transform — so this
@@ -21,8 +23,7 @@ object EventStreams {
   /** Streaming tumbling-window count/sum by event_type with a
     * 10-minute watermark. `dir` is the testdata sf directory. */
   def windowedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read
-      .parquet(s"$dir/events.parquet").schema
+    val schema = ParquetFooter.schema(spark, s"$dir/events.parquet")
     spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -38,7 +39,7 @@ object EventStreams {
 
   /** Batch equivalent for differential testing. */
   def windowedCountsBatch(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/events.parquet")
+    ParquetFooter.read(spark, s"$dir/events.parquet")
       .withColumn("ts2", col("ts").cast("timestamp"))
       .groupBy(window(col("ts2"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -113,7 +114,7 @@ object EventStreams {
   /** Streaming source for [[sessionize]] over the events table. */
   def sessionizeStream(spark: SparkSession, dir: String): Dataset[ClosedSession] = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = ParquetFooter.schema(spark, s"$dir/events.parquet")
     val evs = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")

@@ -103,4 +103,20 @@ class BreachSpec extends AnyFunSuite {
     // holes, so every region touches an absent edge and floods)
     assert(orders.toSeq === (0L until n))
   }
+
+  test("floodOrder and breachDepressions fail above localFixpointMaxRows") {
+    val grid = Derived.partGrid(spark, dir)
+    val saved = Terrain.localFixpointMaxRows
+    Terrain.localFixpointMaxRows = 10
+    try {
+      val runs = Seq[() => Any](
+        () => Terrain.floodOrder(grid).count(),
+        () => Terrain.breachDepressions(grid, 40, 50).count())
+      runs.foreach { run =>
+        val e = intercept[Exception](run())
+        assert(e.getMessage.contains("grid exceeds localFixpointMaxRows=10"),
+          e.getMessage)
+      }
+    } finally Terrain.localFixpointMaxRows = saved
+  }
 }

@@ -184,6 +184,36 @@ class FixpointSpec extends AnyFunSuite {
     } finally SpatialJoins.broadcastKnnMaxBuildRows = saved
   }
 
+  test("kNN join: a build side the planner underestimates past the row bound takes the rounds") {
+    // one row exploded into 60 build points: the planner sees ~1 row
+    val pts = (0 until 60).map(i => (i.toLong, (i % 11) * 0.3, (i % 7) * 0.4))
+    val bDf = Seq(Tuple1(pts)).toDF("a").select(explode(col("a")).as("p"))
+      .select(col("p._1").as("bid"), col("p._2").as("bx0"),
+        col("p._3").as("by0"))
+    val probe = (0L until 40L).map(i => (i, (i % 9) * 0.35, (i % 5) * 0.5))
+    val pDf = probe.toDF("pid", "px0", "py0")
+    val saved = SpatialJoins.broadcastKnnMaxBuildRows
+    try {
+      SpatialJoins.broadcastKnnMaxBuildRows = 10L
+      assert(SpatialJoins.estimatedRows(bDf) <= 10)
+      var got: DataFrame = null
+      // the broadcast arm builds with its one collect; the rounds with more
+      val jobs = JobCount(spark.sparkContext) {
+        got = SpatialJoins.knnJoin(pDf, bDf, 3, probeId = "pid",
+          buildId = "bid", px = "px0", py = "py0", bx = "bx0", by = "by0")
+      }
+      assert(jobs > 1, s"$jobs build jobs: the broadcast arm ran")
+      val expect = probe.flatMap { case (pid, px, py) =>
+        pts.map { case (bid, bx, by) =>
+          (bid, (px - bx) * (px - bx) + (py - by) * (py - by))
+        }.sortBy { case (bid, d2) => (d2, bid) }.take(3).zipWithIndex
+          .map { case ((bid, _), i) => (pid, bid, (i + 1).toLong) }
+      }.toSet
+      assert(got.select("pid", "bid", "rnk").as[(Long, Long, Long)]
+        .collect().toSet === expect)
+    } finally SpatialJoins.broadcastKnnMaxBuildRows = saved
+  }
+
   test("connected components: local union-find == label propagation") {
     // chains, a cycle, a star, self-loop isolated nodes
     val edges = ((0L until 50L).map(i => (i * 3, i * 3 + 3)) ++

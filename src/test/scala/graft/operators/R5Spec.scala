@@ -38,6 +38,22 @@ class R5Spec extends AnyFunSuite {
     assert(w((4L, 7L)) == 0.0)
   }
 
+  test("horizonAngle maxDist: the walk ends at the last step within maxDist") {
+    import spark.implicits._
+    // wall of height +90 at c = 6, 4 cells east of (4, 2)
+    val wall = (for (r <- 0 until 8; c <- 0 until 8)
+      yield (r.toLong, c.toLong, if (c == 6) 100.0 else 10.0))
+      .toDF("r", "c", "v")
+    def at42(maxDist: Double) =
+      Terrain.horizonAngle(wall, 8, 8, azimuthDeg = 90.0, maxDist = maxDist)
+        .where(col("r") === 4 && col("c") === 2).head().getDouble(2)
+    val seen = math.toDegrees(math.atan(90.0 / 4.0))
+    assert(math.abs(at42(4.0) - seen) < 1e-6)
+    assert(math.abs(at42(4.5) - seen) < 1e-6)
+    assert(at42(3.5) == 0.0)
+    assert(at42(0.0) == 0.0)
+  }
+
   test("fetchAnalysis: flat grid is -walk-length; barrier gives +distance") {
     import spark.implicits._
     // due east, flat: no sample ever rises 0.05/unit above the cell,

@@ -36,6 +36,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(Snapshots.isSealed(root, "pages", 1L))
     val back = Snapshots.readSnapshot(spark, root, "pages", 1L)
     assert(back.count() === 200)
+    // the footer schema is what a glob read of the parts infers
+    assert(back.schema ===
+      spark.read.parquet(s"$root/pages/1/part=*").schema)
+  }
+
+  test("readSnapshot refuses an unsealed snapshot") {
+    val root = Files.createTempDirectory("snap").toString
+    Snapshots.writeSnapshot(pages(40), root, "pages", 3L, "url", 4)
+    Files.delete(Paths.get(root, "pages", "3", "_manifest", "_SUCCESS.json"))
+    val e = intercept[IllegalArgumentException](
+      Snapshots.readSnapshot(spark, root, "pages", 3L))
+    assert(e.getMessage.contains("not sealed"))
   }
 
   test("resume after partial write recomputes ONLY missing partitions") {
