@@ -602,16 +602,10 @@ object Terrain {
     val spark = grid.sparkSession
     import spark.implicits._
     val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
     val cells = ptr.select(col("r").cast("long").as("r"),
         col("c").cast("long").as("c"),
-        (col("r") + dyExpr).cast("long").as("tr"),
-        (col("c") + dxExpr).cast("long").as("tc"),
+        (col("r") + perDir(dY)).cast("long").as("tr"),
+        (col("c") + perDir(dX)).cast("long").as("tc"),
         (col("ptr") =!= 0).as("link"), lit(1L).as("w"))
       .as[FlowNode]
     val ext = cells.agg(count(lit(1)), min("r"), max("r"), min("c"),
@@ -763,16 +757,16 @@ object Terrain {
     * attribute is cheap, but over the full d8Pointer pipeline the
     * fused stage duplicates the slope-array subtree per branch and
     * overflows janino's 64 KB method limit. */
-  private[graft] def d8EdgesFromPtr(ptr: DataFrame): DataFrame = {
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
+  private[graft] def d8EdgesFromPtr(ptr: DataFrame): DataFrame =
     ptr.where(col("ptr") > 0).select(col("r"), col("c"),
-      (col("r") + dyExpr).as("tr"), (col("c") + dxExpr).as("tc"))
-  }
+      (col("r") + perDir(dY)).as("tr"), (col("c") + perDir(dX)).as("tc"))
+
+  /** The D8 pointer decoder: `of(i)` where column `ptr` is 2^i, else
+    * `none` (sinks). */
+  private def perDir(of: Int => Any, none: Any = 0): Column =
+    (0 until 8).foldLeft(lit(none)) { (acc, i) =>
+      when(col("ptr") === (1 << i), lit(of(i))).otherwise(acc)
+    }
 
   /** Dinf facet table (Tarboton 1997; reference FlowPointerDinf.java):
     * (orthogonal neighbour index, diagonal neighbour index) per facet
@@ -875,19 +869,8 @@ object Terrain {
 
   /**
    * Dinf flow accumulation: specific catchment = 1 + Σ(w_in · acc_up)
-   * over the weighted Dinf DAG.
-   *
-   * Executed as `rounds` synchronous Jacobi iterations with the
-   * incoming loads pivoted into the 8 fixed direction slots and added
-   * in textual order (d0 + … + d7) — every round is bit-exact against
-   * the identically-unrolled SQL oracle, and once the longest weighted
-   * path has propagated the iteration is EXACTLY stationary (the same
-   * doubles recompute), so any rounds >= longest-path-length yield the
-   * fixpoint. The whole loop is lazy (one job at the end); lineage is
-   * truncated every few rounds. At cluster scale each round is one
-   * shuffle of the cell relation — for deep flowpaths prefer a
-   * generalisation of flowAccumD8's perimeter contraction; this form
-   * is chosen for its deterministic summation order.
+   * over the weighted Dinf DAG, by [[slotAccum]]'s `rounds`
+   * direction-slot Jacobi iterations.
    */
   def dinfAccum(grid: DataFrame, rounds: Int = 24): DataFrame =
     weightedAccum(dinfEdges(grid), grid, rounds)
@@ -905,88 +888,120 @@ object Terrain {
    */
   private[graft] var localFixpointMaxRows: Long = 4000000L
 
-  /** One-task replication of [[weightedAccum]]'s Jacobi rounds:
-    * per target cell the 8 direction slots add in ascending-j order
-    * onto 1.0, exactly the distributed fold (each (target, slot)
-    * receives at most one edge, so the per-slot "sum" is one term and
-    * no ordering freedom exists anywhere). */
-  private def weightedAccumLocal(edges: DataFrame, base: DataFrame,
-                                 rounds: Int): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val tagged = base
-      .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-        lit(0.0).as("w"), lit(-1).cast("int").as("j"))
-      .unionByName(edges.select(col("r"), col("c"), col("tr"),
-        col("tc"), col("w"), col("j").cast("int").as("j")))
-      .as[(Long, Long, Long, Long, Double, Int)]
-    tagged.coalesce(1).mapPartitions { it =>
-      val rows = it.toArray
-      val cells = rows.filter(_._6 == -1).map(t => (t._1, t._2))
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-      cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-      val n = cells.length
-      val inSrc = Array.fill(n, 8)(-1)
-      val inW = Array.ofDim[Double](n, 8)
-      rows.foreach {
-        case (r, c, tr, tc, w, j) if j >= 0 =>
-          val t = idx((tr, tc))
-          require(inSrc(t)(j) == -1, s"duplicate edge slot ($tr,$tc,$j)")
-          inSrc(t)(j) = idx((r, c)); inW(t)(j) = w
-        case _ =>
-      }
-      var acc = Array.fill(n)(1.0)
-      for (_ <- 1 to rounds) {
-        val nxt = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var s = 1.0
-          var j = 0
-          while (j < 8) {
-            if (inSrc(i)(j) >= 0) s += inW(i)(j) * acc(inSrc(i)(j))
-            else s += 0.0
-            j += 1
-          }
-          nxt(i) = s
-          i += 1
-        }
-        acc = nxt
-      }
-      cells.indices.iterator.map(i => (cells(i)._1, cells(i)._2, acc(i)))
-    }.toDF("r", "c", "acc")
-  }
-
-  /** Shared weighted-DAG accumulation: `rounds` direction-slot Jacobi
-    * iterations over (r, c) -> (tr, tc, w, j) edges (see [[dinfAccum]]
-    * for the bit-exactness rationale). Used by Dinf and FD8.
-    * Size-adaptive: grids under [[localFixpointMaxRows]] run the
-    * identical rounds in one task ([[weightedAccumLocal]]). */
-  private[graft] def weightedAccum(edgesIn: DataFrame, grid: DataFrame,
-                                   rounds: Int): DataFrame = {
+  /**
+   * Slot-ordered Jacobi accumulation, the one kernel of the weighted
+   * DAG accumulations (Dinf, FD8, MDInf, the stream-head threshold
+   * switch and mass flux). `cells` is (r, c, seed, source attributes)
+   * and `edges` is (r, c, tr, tc, j, edge attributes), where `j` is
+   * the direction of the source relative to the target, so each
+   * (target, slot) holds at most one edge. Every round sets each cell
+   * to seed + d0 + … + d7, where d_j is what the slot's source sends
+   * (0.0 for an empty slot), added in that textual order — no
+   * ordering freedom anywhere, so every round is bit-exact against
+   * the identically-unrolled SQL oracle, and once the longest path
+   * has propagated the same doubles recompute: any `rounds` >= the
+   * longest path length yields the fixpoint.
+   *
+   * The send rule comes in two forms that must agree: `sendCol` over
+   * `__a` (the source's value) and the attribute columns, for the
+   * distributed rounds, and `send(a, src, edge)` with the source and
+   * edge attributes as doubles in column order, for the one-task
+   * rounds. The loop is not lazy: edges and cells are checkpointed
+   * and the cells counted (eager jobs) to pick the arm. Up to
+   * [[localFixpointMaxRows]] cells the rounds run in one task (one
+   * job when the result is used); above it each round is one shuffle
+   * of the cell relation, and every second round an eager
+   * `localCheckpoint` truncates the lineage. Output: (r, c, acc).
+   */
+  private def slotAccum(cellsIn: DataFrame, edgesIn: DataFrame,
+                        rounds: Int)(sendCol: Column,
+      send: (Double, Array[Double], Array[Double]) => Double): DataFrame = {
     val edges = edgesIn.localCheckpoint(true)
-    val base = grid.select(col("r"), col("c")).localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows)
-      return weightedAccumLocal(edges, base, rounds)
-    var acc = base.withColumn("acc", lit(1.0))
+    val cells = cellsIn.localCheckpoint(true)
+    val srcAttrs = cells.columns.toSeq.diff(Seq("r", "c", "seed"))
+    val edgeAttrs = edges.columns.toSeq.diff(Seq("r", "c", "tr", "tc", "j"))
+    if (cells.count() <= localFixpointMaxRows) {
+      val spark = cells.sparkSession
+      import spark.implicits._
+      def doubles(names: Seq[String]) =
+        if (names.isEmpty) typedLit(Seq.empty[Double])
+        else array(names.map(n => col(n).cast("double")): _*)
+      val tagged = cells
+        .select(col("r").cast("long").as("r"),
+          col("c").cast("long").as("c"),
+          lit(0L).as("tr"), lit(0L).as("tc"), lit(-1).as("j"),
+          col("seed").cast("double").as("seed"), doubles(srcAttrs).as("x"))
+        .unionByName(edges.select(col("r").cast("long").as("r"),
+          col("c").cast("long").as("c"), col("tr").cast("long").as("tr"),
+          col("tc").cast("long").as("tc"), col("j").cast("int").as("j"),
+          lit(0.0).as("seed"), doubles(edgeAttrs).as("x")))
+        .as[(Long, Long, Long, Long, Int, Double, Array[Double])]
+      return tagged.coalesce(1).mapPartitions { it =>
+        val rows = it.toArray
+        val nodes = rows.filter(_._5 == -1)
+        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
+        nodes.zipWithIndex.foreach { case (t, i) => idx((t._1, t._2)) = i }
+        val n = nodes.length
+        val seed = nodes.map(_._6)
+        val src = nodes.map(_._7)
+        // slot i * 8 + j of target i: its source's index and attributes
+        val inSrc = Array.fill(n * 8)(-1)
+        val inE = new Array[Array[Double]](n * 8)
+        rows.foreach {
+          case (r, c, tr, tc, j, _, x) if j >= 0 =>
+            val k = idx((tr, tc)) * 8 + j
+            require(inSrc(k) == -1, s"duplicate edge slot ($tr,$tc,$j)")
+            inSrc(k) = idx((r, c)); inE(k) = x
+          case _ =>
+        }
+        var acc = seed.clone()
+        for (_ <- 1 to rounds) {
+          val nxt = new Array[Double](n)
+          var i = 0
+          while (i < n) {
+            var s = seed(i)
+            var k = i * 8
+            while (k < i * 8 + 8) {
+              val si = inSrc(k)
+              if (si >= 0) s += send(acc(si), src(si), inE(k))
+              else s += 0.0
+              k += 1
+            }
+            nxt(i) = s
+            i += 1
+          }
+          acc = nxt
+        }
+        nodes.indices.iterator.map(i => (nodes(i)._1, nodes(i)._2, acc(i)))
+      }.toDF("r", "c", "acc")
+    }
+    var acc = cells.select(col("r") +: col("c") +: col("seed").as("acc") +:
+      srcAttrs.map(col): _*)
     for (i <- 1 to rounds) {
       val contrib = edges
-        .join(acc.select(col("r"), col("c"), col("acc").as("__a")),
-          Seq("r", "c"))
+        .join(acc.withColumnRenamed("acc", "__a"), Seq("r", "c"))
         .groupBy(col("tr").as("r"), col("tc").as("c"))
-        .agg(sum(when(col("j") === 0, col("w") * col("__a"))).as("d0"),
+        .agg(sum(when(col("j") === 0, sendCol)).as("d0"),
           (1 until 8).map(j =>
-            sum(when(col("j") === j, col("w") * col("__a"))).as(s"d$j")): _*)
-      acc = base.join(contrib, Seq("r", "c"), "left")
-        .select(col("r"), col("c"),
-          (0 until 8).foldLeft(lit(1.0)) { (s, j) =>
+            sum(when(col("j") === j, sendCol)).as(s"d$j")): _*)
+      acc = cells.join(contrib, Seq("r", "c"), "left")
+        .select(col("r") +: col("c") +:
+          (0 until 8).foldLeft(col("seed")) { (s, j) =>
             s + coalesce(col(s"d$j"), lit(0.0))
-          }.as("acc"))
+          }.as("acc") +: srcAttrs.map(col): _*)
       // frequent lineage truncation: nested join+pivot rounds blow up
       // the optimizer's constraint propagation (OOM past ~6 rounds)
       if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
     }
-    acc
+    acc.select(col("r"), col("c"), col("acc"))
   }
+
+  /** Accumulation of 1.0 per cell over weighted (r, c, tr, tc, w, j)
+    * edges: Dinf, FD8 and MDInf. */
+  private def weightedAccum(edges: DataFrame, grid: DataFrame,
+                            rounds: Int): DataFrame =
+    slotAccum(grid.select(col("r"), col("c"), lit(1.0).as("seed")),
+      edges, rounds)(col("w") * col("__a"), (a, _, e) => e(0) * a)
 
   /**
    * FD8 weighted edges (HydroTools/FlowAccumFD8.java:400-436): flow
@@ -1624,62 +1639,6 @@ object Terrain {
         coalesce(col("fa_left"), lit(0.0)).as("fa_left"))
   }
 
-  /** One-task mirror of [[streamHeadsMdinf]]'s Jacobi rounds —
-    * identical per-slot fold in identical order (see
-    * [[weightedAccumLocal]] for the bit-exactness rationale). */
-  private def thresholdAccumLocal(edges: DataFrame, base: DataFrame,
-                                  caThr: Double, rounds: Int)
-      : DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val tagged = base
-      .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-        lit(0.0).as("wm"), lit(false).as("d8"),
-        lit(-1).cast("int").as("slot"))
-      .unionByName(edges.select(col("r"), col("c"), col("tr"),
-        col("tc"), coalesce(col("wm"), lit(0.0)).as("wm"), col("d8"),
-        col("slot").cast("int").as("slot")))
-      .as[(Long, Long, Long, Long, Double, Boolean, Int)]
-    tagged.coalesce(1).mapPartitions { it =>
-      val rows = it.toArray
-      val cells = rows.filter(_._7 == -1).map(t => (t._1, t._2))
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-      cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-      val n = cells.length
-      val inSrc = Array.fill(n, 8)(-1)
-      val inW = Array.ofDim[Double](n, 8)
-      val inD8 = Array.ofDim[Boolean](n, 8)
-      rows.foreach {
-        case (r, c, tr, tc, wm, d8, j) if j >= 0 =>
-          val t = idx((tr, tc))
-          require(inSrc(t)(j) == -1, s"duplicate edge slot ($tr,$tc,$j)")
-          inSrc(t)(j) = idx((r, c)); inW(t)(j) = wm; inD8(t)(j) = d8
-        case _ =>
-      }
-      var acc = Array.fill(n)(1.0)
-      for (_ <- 1 to rounds) {
-        val nxt = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var s = 1.0
-          var j = 0
-          while (j < 8) {
-            if (inSrc(i)(j) >= 0) {
-              val a = acc(inSrc(i)(j))
-              s += (if (a <= caThr) inW(i)(j) * a
-                    else if (inD8(i)(j)) caThr else 0.0)
-            } else s += 0.0
-            j += 1
-          }
-          nxt(i) = s
-          i += 1
-        }
-        acc = nxt
-      }
-      cells.indices.iterator.map(i => (cells(i)._1, cells(i)._2, acc(i)))
-    }.toDF("r", "c", "acc")
-  }
-
   /**
    * StreamHeadsMDInf (GeasyTools/src/plugins/StreamHeadsMDInf.java:
    * 253-540): find stream heads under the MDInf accumulation with
@@ -1691,61 +1650,37 @@ object Terrain {
    * stream water, can never be a head). Heads are the stream cells
    * no other stream cell's D8 send reaches.
    *
-   * Same synchronous-Jacobi execution as [[weightedAccum]] (the
+   * The accumulation is [[slotAccum]]'s Jacobi rounds (the
    * topological process order of the reference is reproduced by
-   * `rounds` >= the DAG depth; the per-slot fixed-order fold makes
-   * every round bit-exact against the unrolled SQL oracle), with the
-   * one-task mirror below [[localFixpointMaxRows]] and one shuffle
-   * of the cell relation per round above it.
+   * `rounds` >= the DAG depth).
    */
   def streamHeadsMdinf(grid: DataFrame, caThr: Double,
                        hExp: Double = 1.0, rounds: Int = 24)
       : DataFrame = {
     val em = mdinfEdges(grid, hExp)
       .select(col("r"), col("c"), col("tr"), col("tc"),
-        (lit(7) - col("j")).cast("int").as("slot"), col("w").as("wm"))
+        (lit(7) - col("j")).cast("int").as("j"), col("w").as("wm"))
     val ed = d8DirMdinf(grid).where(col("dir").isNotNull)
       .select(col("r"), col("c"),
         (col("r") + mYdOf(col("dir"))).as("tr"),
         (col("c") + mXdOf(col("dir"))).as("tc"),
-        ((col("dir") + 4) % 8).cast("int").as("slot"))
+        ((col("dir") + 4) % 8).cast("int").as("j"))
       .localCheckpoint(true)
     // merge: one edge row per (source, target) carrying both the
     // MDInf portion (if any) and the D8-steepest flag (if any) —
     // the threshold on the source's value selects which one sends
     val edges = em
       .join(ed.withColumn("__d8", lit(true)),
-        Seq("r", "c", "tr", "tc", "slot"), "full_outer")
-      .select(col("r"), col("c"), col("tr"), col("tc"), col("slot"),
-        col("wm"), coalesce(col("__d8"), lit(false)).as("d8"))
-      .localCheckpoint(true)
-    val base = grid.select(col("r"), col("c")).localCheckpoint(true)
-    val acc =
-      if (base.count() <= localFixpointMaxRows)
-        thresholdAccumLocal(edges, base, caThr, rounds)
-      else {
-        var a = base.withColumn("acc", lit(1.0))
-        for (i <- 1 to rounds) {
-          val contribExpr =
-            when(col("__a") <= caThr,
-              coalesce(col("wm"), lit(0.0)) * col("__a"))
-              .otherwise(when(col("d8"), lit(caThr)).otherwise(lit(0.0)))
-          val contrib = edges
-            .join(a.select(col("r"), col("c"), col("acc").as("__a")),
-              Seq("r", "c"))
-            .groupBy(col("tr").as("r"), col("tc").as("c"))
-            .agg(sum(when(col("slot") === 0, contribExpr)).as("d0"),
-              (1 until 8).map(j =>
-                sum(when(col("slot") === j, contribExpr)).as(s"d$j")): _*)
-          a = base.join(contrib, Seq("r", "c"), "left")
-            .select(col("r"), col("c"),
-              (0 until 8).foldLeft(lit(1.0)) { (s, j) =>
-                s + coalesce(col(s"d$j"), lit(0.0))
-              }.as("acc"))
-          if (i % 2 == 0 && i < rounds) a = a.localCheckpoint(true)
-        }
-        a
-      }
+        Seq("r", "c", "tr", "tc", "j"), "full_outer")
+      .select(col("r"), col("c"), col("tr"), col("tc"), col("j"),
+        coalesce(col("wm"), lit(0.0)).as("wm"),
+        coalesce(col("__d8"), lit(false)).as("d8"))
+    val acc = slotAccum(grid.select(col("r"), col("c"),
+        lit(1.0).as("seed")), edges, rounds)(
+      when(col("__a") <= caThr, col("wm") * col("__a"))
+        .otherwise(when(col("d8"), lit(caThr)).otherwise(lit(0.0))),
+      (a, _, e) =>
+        if (a <= caThr) e(0) * a else if (e(1) != 0.0) caThr else 0.0)
     // head = stream cell (acc > T) not fed by any stream cell's D8
     // send (the reference's output=0 mark, StreamHeadsMDInf.java:525)
     val blocked = ed
@@ -1813,26 +1748,18 @@ object Terrain {
    * at its loading; along the D8 pointer DAG a cell passes
    * max(0, (flux - absorption) * efficiency) to its downslope
    * neighbour. Input grid carries (r, c, v, load, eff, absorp);
-   * executed as synchronous direction-slot Jacobi rounds (the
-   * [[weightedAccum]] exactness scheme, with the source-side
-   * clamp transform) — stationary once the longest flowpath has
+   * executed as [[slotAccum]]'s Jacobi rounds with the source-side
+   * clamp as the send rule — stationary once the longest flowpath has
    * propagated, bit-exact vs the identically-unrolled SQL oracle.
    */
   def massFluxD8(grid: DataFrame, rounds: Int = 24): DataFrame = {
     val ptr = d8Pointer(grid.select(col("r"), col("c"), col("v")))
-    def fromPtr(ds: Seq[Int]) = (0 until 8).foldLeft(lit(0)) { (a, i) =>
-      when(col("ptr") === (1 << i), lit(ds(i))).otherwise(a)
-    }
-    val jIdx = (0 until 8).foldLeft(lit(-1)) { (a, i) =>
-      when(col("ptr") === (1 << i), lit((i + 4) % 8)).otherwise(a)
-    }
     val edges = ptr.where(col("ptr") > 0)
       .select(col("r"), col("c"),
-        (col("r") + fromPtr(dY)).as("tr"),
-        (col("c") + fromPtr(dX)).as("tc"),
-        lit(1.0).as("w"), jIdx.as("j"))
-      .localCheckpoint(true)
-    massFluxRun(edges, grid, rounds)
+        (col("r") + perDir(dY)).as("tr"),
+        (col("c") + perDir(dX)).as("tc"),
+        lit(1.0).as("w"), perDir(i => (i + 4) % 8, -1).as("j"))
+    massFlux(edges, grid, rounds)
   }
 
   /**
@@ -1844,102 +1771,19 @@ object Terrain {
    * proportional split of the outflux by the Dinf angle is exactly
    * the dinfEdges weight pair.)
    */
-  def massFluxDinf(grid: DataFrame, rounds: Int = 24): DataFrame = {
-    val edges = dinfEdges(grid.select(col("r"), col("c"), col("v")))
-      .localCheckpoint(true)
-    massFluxRun(edges, grid, rounds)
-  }
+  def massFluxDinf(grid: DataFrame, rounds: Int = 24): DataFrame =
+    massFlux(dinfEdges(grid.select(col("r"), col("c"), col("v"))), grid,
+      rounds)
 
-  /** Shared mass-flux Jacobi over weighted edges (r, c, tr, tc, w, j):
-    * acc = load + Σ_slots w·max((acc_src − absorp_src)·eff_src, 0),
-    * slots added in fixed textual order (at most one edge per
-    * (target, slot), so no ordering freedom — see [[weightedAccum]]).
-    * Size-adaptive via [[localFixpointMaxRows]]. */
-  private def massFluxRun(edges: DataFrame, grid: DataFrame,
-                          rounds: Int): DataFrame = {
-    val attrs = grid.select(col("r"), col("c"), col("load"),
-      col("eff"), col("absorp")).localCheckpoint(true)
-    if (attrs.count() <= localFixpointMaxRows)
-      return massFluxLocal(edges, attrs, rounds)
-    var acc = attrs.select(col("r"), col("c"), col("load").as("acc"))
-    for (i <- 1 to rounds) {
-      val send = col("w") *
-        greatest((col("__a") - col("absorp")) * col("eff"), lit(0.0))
-      val contrib = edges
-        .join(acc.select(col("r"), col("c"), col("acc").as("__a"))
-          .join(attrs, Seq("r", "c")), Seq("r", "c"))
-        .groupBy(col("tr").as("r"), col("tc").as("c"))
-        .agg(sum(when(col("j") === 0, send)).as("d0"),
-          (1 until 8).map(j =>
-            sum(when(col("j") === j, send)).as(s"d$j")): _*)
-      acc = attrs.join(contrib, Seq("r", "c"), "left")
-        .select(col("r"), col("c"),
-          (0 until 8).foldLeft(col("load")) { (s, j) =>
-            s + coalesce(col(s"d$j"), lit(0.0))
-          }.as("acc"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
-    }
-    acc
-  }
-
-  /** One-task replication of [[massFluxRun]]'s rounds (see
-    * [[weightedAccumLocal]] — same exactness argument; the fold seeds
-    * at the cell's own loading and each slot adds the weighted clamped
-    * send from its unique source). */
-  private def massFluxLocal(edges: DataFrame, attrs: DataFrame,
-                            rounds: Int): DataFrame = {
-    val spark = attrs.sparkSession
-    import spark.implicits._
-    val tagged = attrs
-      .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-        col("load"), col("eff"), col("absorp"), lit(0.0).as("w"),
-        lit(-1).cast("int").as("j"))
-      .unionByName(edges.select(col("r"), col("c"), col("tr"),
-        col("tc"), lit(0.0).as("load"), lit(0.0).as("eff"),
-        lit(0.0).as("absorp"), col("w"), col("j").cast("int").as("j")))
-      .as[(Long, Long, Long, Long, Double, Double, Double, Double, Int)]
-    tagged.coalesce(1).mapPartitions { it =>
-      val rows = it.toArray
-      val cells = rows.filter(_._9 == -1)
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-      cells.zipWithIndex.foreach { case (t, i) => idx((t._1, t._2)) = i }
-      val n = cells.length
-      val load = cells.map(_._5)
-      val eff = cells.map(_._6)
-      val absorp = cells.map(_._7)
-      val inSrc = Array.fill(n, 8)(-1)
-      val inW = Array.ofDim[Double](n, 8)
-      rows.foreach {
-        case (r, c, tr, tc, _, _, _, w, j) if j >= 0 =>
-          val t = idx((tr, tc))
-          require(inSrc(t)(j) == -1, s"duplicate edge slot ($tr,$tc,$j)")
-          inSrc(t)(j) = idx((r, c)); inW(t)(j) = w
-        case _ =>
-      }
-      var acc = load.clone()
-      for (_ <- 1 to rounds) {
-        val nxt = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var s = load(i)
-          var j = 0
-          while (j < 8) {
-            val si = inSrc(i)(j)
-            if (si >= 0)
-              s += inW(i)(j) *
-                math.max((acc(si) - absorp(si)) * eff(si), 0.0)
-            else s += 0.0
-            j += 1
-          }
-          nxt(i) = s
-          i += 1
-        }
-        acc = nxt
-      }
-      cells.indices.iterator.map(i =>
-        (cells(i)._1, cells(i)._2, acc(i)))
-    }.toDF("r", "c", "acc")
-  }
+  /** acc = load + Σ_slots w·max((acc_src − absorp_src)·eff_src, 0)
+    * over weighted (r, c, tr, tc, w, j) edges. */
+  private def massFlux(edges: DataFrame, grid: DataFrame,
+                       rounds: Int): DataFrame =
+    slotAccum(grid.select(col("r"), col("c"), col("load").as("seed"),
+        col("absorp"), col("eff")), edges, rounds)(
+      col("w") *
+        greatest((col("__a") - col("absorp")) * col("eff"), lit(0.0)),
+      (a, s, e) => e(0) * math.max((a - s(0)) * s(1), 0.0))
 
   /**
    * Rho8 stochastic flow pointer (HydroTools/FlowPointerRho8.java:
@@ -2369,7 +2213,8 @@ object Terrain {
       .join(pred1, Seq("r", "c"), "left")
       .select(col("r"), col("c"),
         coalesce(col("pr"), col("r")).as("tr"),
-        coalesce(col("pc"), col("c")).as("tc"))
+        coalesce(col("pc"), col("c")).as("tc"), lit(0L).as("ns"),
+        lit(0L).as("nd"))
       .localCheckpoint(true)
     resolvePointers(nxt).select(col("r"), col("c"),
       (col("tr") * width + col("tc")).as("link_id"))
@@ -2678,22 +2523,7 @@ object Terrain {
     val (stream, sedges, indeg) = streamGraph(grid, threshold)
     val links = linkFromGraph(stream, sedges, indeg, width)
       .localCheckpoint(true)
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val isStream = stream.withColumn("__s", lit(true))
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
-      .localCheckpoint(true)
-    resolvePointers(next)
+    resolvePointers(d8Next(d8Pointer(grid), Some(stream)))
       .join(links.select(col("r").as("tr"), col("c").as("tc"),
         col("link_id")), Seq("tr", "tc"))
       .select(col("r"), col("c"), col("link_id").as("basin"))
@@ -2708,25 +2538,10 @@ object Terrain {
    */
   def elevAboveStream(grid: DataFrame, threshold: Long): DataFrame = {
     val (stream, _, _) = streamGraph(grid, threshold)
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val isStream = stream.withColumn("__s", lit(true))
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
-      .localCheckpoint(true)
     val sv = stream.join(grid.select(col("r"), col("c"), col("v")),
         Seq("r", "c"))
       .select(col("r").as("tr"), col("c").as("tc"), col("v").as("sv"))
-    resolvePointers(next)
+    resolvePointers(d8Next(d8Pointer(grid), Some(stream)))
       .join(sv, Seq("tr", "tc"))
       .join(grid.select(col("r"), col("c"), col("v")), Seq("r", "c"))
       .select(col("r"), col("c"),
@@ -2763,24 +2578,9 @@ object Terrain {
         Seq("r", "c"), "left")
       .where(col("__in").isNull)
       .select(col("r"), col("c"), col("v"))
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val isStream = stream.withColumn("__s", lit(true))
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
-      .localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("head_id").orderBy("v", "r", "c")
-    resolvePointers(next)
+    resolvePointers(d8Next(d8Pointer(grid), Some(stream)))
       .join(ridge, Seq("r", "c"))
       .join(heads, Seq("tr", "tc"))
       .withColumn("__rn", row_number().over(w))
@@ -2938,12 +2738,9 @@ object Terrain {
           .otherwise(col("link_id")).as("sid"))
     // 8-neighbour scan table around every stream cell with a pointer;
     // rp = rotation position clockwise from the downslope direction
-    val cix = (0 until 8).foldLeft(lit(-1)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(i)).otherwise(acc)
-    }
     val sp = stream.join(ptr, Seq("r", "c")).where(col("ptr") > 0)
       .join(sid, Seq("r", "c"))
-      .select(col("r"), col("c"), col("sid"), cix.as("cix"))
+      .select(col("r"), col("c"), col("sid"), perDir(i => i, -1).as("cix"))
     val dirs = (0 until 8).map(d =>
       (d, dY(d), dX(d), 1 << ((d + 4) % 8)))
       .toDF("d", "dy", "dx", "inflow")
@@ -2995,21 +2792,7 @@ object Terrain {
     val seeds = bank
       .unionByName(sid.select(col("r"), col("c"), col("sid").as("lbl")))
       .localCheckpoint(true)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val isSeed = seeds.select(col("r"), col("c"), lit(true).as("__s"))
-    val next = ptr.join(isSeed, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
-      .localCheckpoint(true)
-    val resolved = resolvePointers(next)
+    val resolved = resolvePointers(d8Next(ptr, Some(seeds)))
       .join(seeds.select(col("r").as("tr"), col("c").as("tc"),
         col("lbl")), Seq("tr", "tc"))
       .select(col("r"), col("c"), col("lbl"))
@@ -3029,23 +2812,7 @@ object Terrain {
    * doubling is bit-exact against the sequential-walk oracle.
    */
   def flowpathLength(grid: DataFrame): DataFrame = {
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val diag = (0 until 8).foldLeft(lit(false)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(i % 2 == 0)).otherwise(acc)
-    }
-    val next = ptr.select(col("r"), col("c"),
-        when(col("ptr") > 0, col("r") + dyExpr).otherwise(col("r")).as("tr"),
-        when(col("ptr") > 0, col("c") + dxExpr).otherwise(col("c")).as("tc"),
-        when(col("ptr") > 0 && !diag, 1L).otherwise(0L).as("ns"),
-        when(col("ptr") > 0 && diag, 1L).otherwise(0L).as("nd"))
-      .localCheckpoint(true)
-    resolvePointersSteps(next).select(col("r"), col("c"),
+    resolvePointers(d8Next(d8Pointer(grid))).select(col("r"), col("c"),
       round(col("ns") + col("nd") * math.sqrt(2.0), 6).as("fp_len"))
   }
 
@@ -3249,26 +3016,7 @@ object Terrain {
   def downslopeDistanceToStream(grid: DataFrame,
                                 threshold: Long): DataFrame = {
     val (stream, _, _) = streamGraph(grid, threshold)
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val diag = (0 until 8).foldLeft(lit(false)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(i % 2 == 0)).otherwise(acc)
-    }
-    val isStream = stream.withColumn("__s", lit(true))
-    val stop = col("__s").isNotNull || col("ptr") === 0
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(stop, col("r")).otherwise(col("r") + dyExpr).as("tr"),
-        when(stop, col("c")).otherwise(col("c") + dxExpr).as("tc"),
-        when(!stop && !diag, 1L).otherwise(0L).as("ns"),
-        when(!stop && diag, 1L).otherwise(0L).as("nd"))
-      .localCheckpoint(true)
-    resolvePointersSteps(next)
+    resolvePointers(d8Next(d8Pointer(grid), Some(stream)))
       .join(stream.select(col("r").as("tr"), col("c").as("tc")),
         Seq("tr", "tc"))
       .select(col("r"), col("c"),
@@ -3613,79 +3361,19 @@ object Terrain {
   }
 
   /**
-   * Watershed (HydroTools/Watershed.java:386-401 trace semantics):
-   * label every cell with the sink (terminal cell, ptr = 0) its D8
-   * flowpath reaches. Distributed by POINTER DOUBLING: each round
-   * replaces every cell's successor with its successor's successor,
-   * so convergence takes O(log(longest path)) rounds instead of
-   * O(path) — the Spark-native answer to the reference's per-cell
-   * downstream trace loop.
-   * Output: (r, c, sink_id) with sink_id = sink.r * width + sink.c.
-   */
-  /**
-   * Pointer-chase fixpoint shared by watershed / subbasins / stream
-   * links / flowpath length: input (r, c, tr, tc) with absorbing
-   * cells self-pointing; output has every (tr, tc) resolved to its
-   * terminal cell. Size-adaptive ([[localFixpointMaxRows]]): small
-   * relations chase in ONE task with memoised path walking (integer-
-   * only, so bit-identical to the doubling); large ones run
-   * distributed pointer doubling with a per-round convergence count.
-   * Input must already be checkpointed (both paths re-scan it).
+   * Pointer chase shared by watershed / subbasins / stream links /
+   * flowpath length and the stream-absorbed traces: input
+   * (r, c, tr, tc, ns, nd) with absorbing cells self-pointing with no
+   * steps; output has every (tr, tc) resolved to its terminal cell,
+   * with the straight / diagonal step counts summed along the path
+   * (integers — exact under any composition order; callers without
+   * steps pass zeros). Size-adaptive ([[localFixpointMaxRows]]):
+   * small relations chase in ONE task with memoised path walking,
+   * large ones run distributed pointer doubling until a round moves
+   * no target and no count. Input must already be checkpointed (both
+   * paths re-scan it).
    */
   private[graft] def resolvePointers(next0: DataFrame): DataFrame = {
-    if (next0.count() <= localFixpointMaxRows) {
-      val spark = next0.sparkSession
-      import spark.implicits._
-      return next0.select(col("r"), col("c"), col("tr"), col("tc"))
-        .as[(Long, Long, Long, Long)]
-        .coalesce(1).mapPartitions { it =>
-          val rows = it.toArray
-          val nxt = new scala.collection.mutable.HashMap[
-            (Long, Long), (Long, Long)]
-          rows.foreach(t => nxt((t._1, t._2)) = (t._3, t._4))
-          val root = new scala.collection.mutable.HashMap[
-            (Long, Long), (Long, Long)]
-          def resolve(k0: (Long, Long)): (Long, Long) = {
-            var path = List.empty[(Long, Long)]
-            var k = k0
-            while (!root.contains(k) && nxt.getOrElse(k, k) != k) {
-              path ::= k
-              k = nxt(k)
-            }
-            val r = root.getOrElse(k, k)
-            path.foreach(p => root(p) = r)
-            r
-          }
-          rows.iterator.map { t =>
-            val r = resolve((t._1, t._2))
-            (t._1, t._2, r._1, r._2)
-          }
-        }.toDF("r", "c", "tr", "tc")
-    }
-    var next = next0
-    var converged = false
-    while (!converged) {
-      val hop = next.select(col("r").as("hr"), col("c").as("hc"),
-        col("tr").as("ttr"), col("tc").as("ttc"))
-      val doubled = next.join(hop,
-          col("tr") === col("hr") && col("tc") === col("hc"), "inner")
-        .select(col("r"), col("c"), col("ttr").as("tr"),
-          col("ttc").as("tc"))
-        .localCheckpoint(true)
-      val moved = doubled.join(next.select(col("r"), col("c"),
-          col("tr").as("otr"), col("tc").as("otc")), Seq("r", "c"))
-        .where(col("tr") =!= col("otr") || col("tc") =!= col("otc"))
-        .count()
-      next = doubled
-      converged = moved == 0
-    }
-    next
-  }
-
-  /** [[resolvePointers]] variant that also composes the straight /
-    * diagonal step counts (integers — exact under any composition
-    * order). Input/output: (r, c, tr, tc, ns, nd). */
-  private[graft] def resolvePointersSteps(next0: DataFrame): DataFrame = {
     if (next0.count() <= localFixpointMaxRows) {
       val spark = next0.sparkSession
       import spark.implicits._
@@ -3701,14 +3389,14 @@ object Terrain {
           // memo: cell -> (root, total ns, total nd)
           val memo = new scala.collection.mutable.HashMap[
             (Long, Long), (Long, Long, Long, Long)]
+          def target(k: (Long, Long)) =
+            nxt.get(k).map(e => (e._1, e._2)).getOrElse(k)
           def resolve(k0: (Long, Long)): (Long, Long, Long, Long) = {
             var path = List.empty[(Long, Long)]
             var k = k0
-            while (!memo.contains(k) && {
-                val e = nxt(k); (e._1, e._2) != k
-              }) {
+            while (!memo.contains(k) && target(k) != k) {
               path ::= k
-              k = { val e = nxt(k); (e._1, e._2) }
+              k = target(k)
             }
             var cur = memo.getOrElse(k, (k._1, k._2, 0L, 0L))
             path.foreach { p =>
@@ -3737,13 +3425,35 @@ object Terrain {
           (col("nd") + col("hnd")).as("nd"))
         .localCheckpoint(true)
       val moved = doubled.join(next.select(col("r"), col("c"),
+          col("tr").as("otr"), col("tc").as("otc"),
           col("ns").as("ons"), col("nd").as("ond")), Seq("r", "c"))
-        .where(col("ns") =!= col("ons") || col("nd") =!= col("ond"))
+        .where(col("tr") =!= col("otr") || col("tc") =!= col("otc") ||
+          col("ns") =!= col("ons") || col("nd") =!= col("ond"))
         .count()
       next = doubled
       converged = moved == 0
     }
     next
+  }
+
+  /** [[resolvePointers]]' input over the D8 pointer grid `ptr`: each
+    * cell points at its downslope neighbour with one straight (ns) or
+    * diagonal (nd) step; sinks and the `absorbing` cells point at
+    * themselves with none. Checkpointed. */
+  private def d8Next(ptr: DataFrame,
+                     absorbing: Option[DataFrame] = None): DataFrame = {
+    val p = absorbing.fold(ptr)(a => ptr.join(
+      a.select(col("r"), col("c"), lit(true).as("__s")), Seq("r", "c"),
+      "left"))
+    val stop = absorbing.fold(col("ptr") === 0)(_ =>
+      col("__s").isNotNull || col("ptr") === 0)
+    val diag = perDir(_ % 2 == 0, false)
+    p.select(col("r"), col("c"),
+        when(stop, col("r")).otherwise(col("r") + perDir(dY)).as("tr"),
+        when(stop, col("c")).otherwise(col("c") + perDir(dX)).as("tc"),
+        when(!stop && !diag, 1L).otherwise(0L).as("ns"),
+        when(!stop && diag, 1L).otherwise(0L).as("nd"))
+      .localCheckpoint(true)
   }
 
   /**
@@ -4224,16 +3934,20 @@ object Terrain {
       // memoized on the GRID plan (the four flowpath tools all derive
       // the identical closure from the same DEM per session; keying
       // on the checkpointed pointer would never hit)
-      flowpathClosureImpl(d8Pointer(grid).localCheckpoint(true))
+      val ptr = d8Pointer(grid).localCheckpoint(true)
+      closure(ptr, d8EdgesFromPtr(ptr).withColumn("dn", stepNano))
     }
 
-  private def flowpathClosureImpl(ptr: DataFrame): DataFrame = {
-    val e = d8EdgesFromPtr(ptr).withColumn("d", stepNano)
-      .localCheckpoint(true)
-    var r = ptr.select(col("r").as("sr"), col("c").as("sc"),
+  /** Transitive closure (sr, sc, r, c, dn) of the paths along
+    * `edges` (r, c, tr, tc, dn) over `cells` (r, c), identity rows
+    * (dn = 0) included, by doubling: each round joins the relation to
+    * itself, adding `dn` along the joined paths, until a round adds
+    * no row. */
+  private def closure(cells: DataFrame, edges: DataFrame): DataFrame = {
+    var r = cells.select(col("r").as("sr"), col("c").as("sc"),
         col("r"), col("c"), lit(0L).as("dn"))
-      .unionByName(e.select(col("r").as("sr"), col("c").as("sc"),
-        col("tr").as("r"), col("tc").as("c"), col("d").as("dn")))
+      .unionByName(edges.select(col("r").as("sr"), col("c").as("sc"),
+        col("tr").as("r"), col("tc").as("c"), col("dn")))
       .localCheckpoint(true)
     var n = r.count()
     var converged = false
@@ -4393,26 +4107,7 @@ object Terrain {
       .where(col("rn") === 1)
       .select(col("r"), col("c"), col("nr").as("tr"), col("nc").as("tc"))
       .localCheckpoint(true)
-    // upstream closure via the same doubling as flowpathClosure
-    var rch = creek.select(col("r").as("sr"), col("c").as("sc"),
-        col("r"), col("c"))
-      .unionByName(edges.select(col("r").as("sr"), col("c").as("sc"),
-        col("tr").as("r"), col("tc").as("c")))
-      .distinct().localCheckpoint(true)
-    var n = rch.count()
-    var converged = false
-    while (!converged) {
-      val hop = rch.select(col("sr").as("hr"), col("sc").as("hc"),
-        col("r").as("r2"), col("c").as("c2"))
-      val doubled = rch
-        .join(hop, col("r") === col("hr") && col("c") === col("hc"))
-        .select(col("sr"), col("sc"), col("r2").as("r"), col("c2").as("c"))
-        .unionByName(rch).distinct().localCheckpoint(true)
-      val n2 = doubled.count()
-      converged = n2 == n
-      n = n2
-      rch = doubled
-    }
+    val rch = closure(creek, edges.withColumn("dn", lit(0L)))
     rch.join(creek.select(col("r").as("sr"), col("c").as("sc"),
         col("area")), Seq("sr", "sc"))
       .groupBy("r", "c")
@@ -4686,22 +4381,16 @@ object Terrain {
         (coalesce(col("k"), lit(0L)).cast("double") / iters).as("pdep"))
   }
 
-  def watershed(grid: DataFrame, width: Long): DataFrame = {
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    // next(cell): downstream cell for flowing cells, self for sinks
-    val next = ptr.select(col("r"), col("c"),
-        when(col("ptr") > 0, col("r") + dyExpr).otherwise(col("r"))
-          .as("tr"),
-        when(col("ptr") > 0, col("c") + dxExpr).otherwise(col("c"))
-          .as("tc"))
-      .localCheckpoint(true)
-    resolvePointers(next).select(col("r"), col("c"),
+  /**
+   * Watershed (HydroTools/Watershed.java:386-401 trace semantics):
+   * label every cell with the sink (terminal cell, ptr = 0) its D8
+   * flowpath reaches, by [[resolvePointers]] — pointer doubling in
+   * the distributed arm, so convergence takes O(log(longest path))
+   * rounds instead of O(path): the Spark-native answer to the
+   * reference's per-cell downstream trace loop.
+   * Output: (r, c, sink_id) with sink_id = sink.r * width + sink.c.
+   */
+  def watershed(grid: DataFrame, width: Long): DataFrame =
+    resolvePointers(d8Next(d8Pointer(grid))).select(col("r"), col("c"),
       (col("tr") * width + col("tc")).as("sink_id"))
-  }
 }

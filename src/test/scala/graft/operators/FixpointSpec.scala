@@ -232,6 +232,43 @@ class FixpointSpec extends AnyFunSuite {
     } finally GraphCC.localMaxEdges = saved
   }
 
+  test("stream heads MDInf: threshold switch and D8 pass-down, local == distributed") {
+    // at caThr 3 most cells spread their area over the MDInf facets
+    // while the larger ones reset to caThr and send it down the D8
+    // flag alone, so both branches of the send rule run in every round
+    val g = hashGrid(20, 25)
+    for (thr <- Seq(3.0, 8.0)) {
+      def run() = Terrain.streamHeadsMdinf(g, caThr = thr).collect()
+        .map(x => (x.getLong(0), x.getLong(1)) -> x.getInt(2)).toMap
+      val heads = withMaxRows(Long.MaxValue)(run()).values
+      assert(heads.count(_ == 1) > 0 && heads.count(_ == 0) > 0,
+        s"caThr $thr: heads ${heads.count(_ == 1)} of ${heads.size}")
+      both(() => run())
+    }
+  }
+
+  test("mass flux Dinf: local Jacobi == distributed rounds") {
+    val g = hashGrid(20, 25)
+      .withColumn("load", col("v") / 10.0)
+      .withColumn("eff", lit(0.8) + (col("r") % 3).cast("double") * 0.05)
+      .withColumn("absorp", (col("c") % 4).cast("double") * 0.01)
+    both(() => Terrain.massFluxDinf(g, rounds = 24).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap)
+  }
+
+  test("downslope distance to stream: absorbing chase with step counts, local == distributed") {
+    val g = hashGrid(20, 25)
+    def run() = Terrain.downslopeDistanceToStream(g, 5L).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
+    val dist = withMaxRows(Long.MaxValue)(run()).values
+    // stream cells stop at 0; the rest compose straight and diagonal
+    // steps, so both step kinds appear in the totals
+    assert(dist.exists(_ == 0L))
+    assert(dist.exists(d => d > 0 && d % 1000000000L == 0))
+    assert(dist.exists(d => d % 1000000000L != 0))
+    both(() => run())
+  }
+
   test("mass flux: local Jacobi == distributed rounds") {
     val g = hashGrid(20, 25)
       .withColumn("load", col("v") / 10.0)
