@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
 import graft.expr.GeoFunctions._
 import graft.operators.{Derived, Similarity, Skew, SpatialJoins, TextOps}
 
@@ -69,11 +70,11 @@ object ScalingBench {
 
     val nPart = cpus.toInt * 3
     val pts = scaledPoints(spark, sfDir, factor)
-      .repartition(nPart).localCheckpoint(true)
-    val nPages = pts.count()
+      .repartition(nPart).transform(Checkpoint(_))
+    val nPages = Checkpoint.rows(pts)
     val supBase = Derived.supplierPoints(spark, sfDir)
       .select(col("s_id"), col("sx"), col("sy"))
-    val sup = supBase.localCheckpoint(true)
+    val sup = Checkpoint(supBase)
     // kNN probe side scaled with the build side so per-round work
     // dominates round-trip latency
     val supFactor = math.max(8, factor / 50)
@@ -82,7 +83,7 @@ object ScalingBench {
       .select((col("s_id") * supFactor + col("rep")).as("s_id"),
         (col("sx") + col("rep") * 1e-5).as("sx"),
         (col("sy") + col("rep") * 1e-5).as("sy"))
-      .repartition(nPart).localCheckpoint(true)
+      .repartition(nPart).transform(Checkpoint(_))
     // Realistic dedup corpus: the sf documents have a ~31-word
     // vocabulary, which degenerates LSH (all token sets collide into
     // a handful of buckets -> quadratic candidates). Web-scale text
@@ -100,7 +101,7 @@ object ScalingBench {
         base.select((col("doc_id") + 10000000L).as("doc_id"),
           expr("array_join(slice(split(text, ' '), 1, 28), ' ')")
             .as("text")))
-      .repartition(nPart).localCheckpoint(true)
+      .repartition(nPart).transform(Checkpoint(_))
     // ANN input (pre-materialised like the other inputs: the bench
     // times the operators, not input synthesis)
     val embFactor = math.max(8, factor / 25)
@@ -108,7 +109,7 @@ object ScalingBench {
       .crossJoin(spark.range(embFactor).select(col("id").as("rep")))
       .select((col("vec_id") * embFactor + col("rep")).as("vec_id"),
         col("embedding"), col("label"))
-      .repartition(nPart).localCheckpoint(true)
+      .repartition(nPart).transform(Checkpoint(_))
 
     // Headline PIP input (VERDICT r3): a dense deterministic zone
     // layer sized so the ray-cast kernel, not fixed job overhead,
@@ -120,7 +121,7 @@ object ScalingBench {
     val perCell = sys.env.getOrElse("SPARK_GRAFT_ZONES_PER_CELL", "2").toInt
     val zoneVerts = sys.env.getOrElse("SPARK_GRAFT_ZONE_VERTS", "4800").toInt
     val denseZones = Derived.scaledZones(spark, zoneRes, perCell, zoneVerts)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
 
     // best-of-3: the first pass pays JIT/codegen/page-cache warmup and
     // the host shows multi-second transient throughput dips; the

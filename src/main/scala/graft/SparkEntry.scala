@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
 import graft.expr.GeoFunctions._
 import graft.operators.{Derived, Raster, Similarity, SpatialJoins, TextOps}
 
@@ -769,7 +770,7 @@ object SparkEntry {
         .select((col("r") * 50 + col("c")).as("sid"),
           col("c").cast("double").as("sx"),
           col("r").cast("double").as("sy"), col("v").as("sv"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val tgt = g.select((col("r") * 50 + col("c")).as("tid"),
         col("c").cast("double").as("tx"), col("r").cast("double").as("ty"))
       val nn = operators.SpatialJoins.knnJoin(tgt, smp, 2,
@@ -802,7 +803,7 @@ object SparkEntry {
         .select((col("r") * 50 + col("c")).as("sid"),
           col("c").cast("double").as("sx"),
           col("r").cast("double").as("sy"), col("v").as("sv"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val tgt = g.select((col("r") * 50 + col("c")).as("tid"),
         col("c").cast("double").as("tx"), col("r").cast("double").as("ty"))
       val nn = operators.SpatialJoins.knnJoin(tgt, smp, 3,
@@ -862,7 +863,7 @@ object SparkEntry {
         .select((col("r") * 50 + col("c")).as("sid"),
           col("c").cast("double").as("sx"),
           col("r").cast("double").as("sy"), col("v").as("sv"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val tgt = g.select((col("r") * 50 + col("c")).as("tid"),
         col("c").cast("double").as("tx"), col("r").cast("double").as("ty"))
       val nn = operators.SpatialJoins.knnJoin(tgt, smp, 3,
@@ -2406,7 +2407,7 @@ object SparkEntry {
           when(col("dy") * col("dy") + col("dx") * col("dx") === 2,
             math.sqrt(2.0)).otherwise(lit(1.0)))
         .withColumn("slope", (col("cz") - col("nv")) / col("dist"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val st1 = con.groupBy("r", "c").agg(max("slope").as("mxs"),
         min(when(col("slope") >= 0, col("slope"))).as("mns"),
         sum(when(col("slope") >= 0, 1L).otherwise(0L)).as("nn"))
@@ -2460,7 +2461,7 @@ object SparkEntry {
     "geo_extract_valleys" -> ((s, dir) => {
       val g = Derived.partGrid(s, dir)
       val con1 = operators.Focal.contributions(g, 1, reflect = false,
-        GridRows, GridCols).localCheckpoint(true)
+        GridRows, GridCols).transform(Checkpoint(_))
       def pick(dy: Int, dx: Int, nm: String) =
         max(when(col("dy") === dy && col("dx") === dx, col("nv"))).as(nm)
       val nb = con1.groupBy("r", "c").agg(
@@ -2904,7 +2905,7 @@ object SparkEntry {
           (col("y0") + (lit(9) + col("fid") % 2)).as("py")))).as("p"))
         .select(col("fid"), col("p.i").as("i"), col("p.px").as("px"),
           col("p.py").as("py"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val pi = pts.select(col("fid"), col("i").as("ia"),
         col("px").as("ax"), col("py").as("ay"))
       val pj = pts.select(col("fid"), col("i").as("ib"),
@@ -2950,7 +2951,6 @@ object SparkEntry {
       val ii = g.withColumn("sic", sum("zi").over(wRow))
         .withColumn("ii", sum("sic").over(wCol))
         .select(col("r").as("ir"), col("c").as("ic"), col("ii"))
-        .localCheckpoint(true)
       val tgt = g.select(col("r"), col("c"), col("zi"),
           explode(lit(radii.toArray)).as("rad"))
         .withColumn("y1", least(greatest(col("r") - col("rad"), lit(0L)),

@@ -12,10 +12,10 @@ import org.apache.spark.sql.DataFrame
  * where the shared graph itself computes in ~1 s). Entries are keyed
  * by the *semantic hash of the input plan* plus an operator tag, so a
  * hit is exactly "same logical input, same operator" — the cached
- * frame is an eagerly materialized localCheckpoint, bit-identical to
- * a recompute.
+ * frame is a footed [[Checkpoint]], bit-identical to a recompute, whose
+ * row count and int/long column ranges callers read without a job.
  *
- * Entries register the block ids of the RETURNED checkpointed frames
+ * Entries register the RDD ids of the RETURNED checkpointed frames
  * only (NOT every checkpoint created while the builder ran — interior
  * per-round checkpoints are transient and must stay reapable), and
  * the table is LRU-capped: a session that keeps minting one-off keys
@@ -57,7 +57,7 @@ object Memo {
 
   /** Memoized build of several frames that share one computation
     * (e.g. streamGraph's stream/edges/indegree triple). The builder's
-    * outputs are eagerly checkpointed; a later call with the same key
+    * outputs are footed checkpoints; a later call with the same key
     * returns the materialized frames without recompute. */
   def cachedSeq(k: String, spark: org.apache.spark.sql.SparkSession)
                (build: => Seq[DataFrame]): Seq[DataFrame] =
@@ -74,13 +74,11 @@ object Memo {
           cache.remove(k)
         case None =>
       }
-      // run the builder FIRST: its interior checkpoints (per-round
-      // lineage truncation) are transient and stay reapable; only the
-      // final eager checkpoints of the returned frames are protected
-      val built = build
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val dfs = built.map(_.localCheckpoint(eager = true))
-      val ids = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      // only the returned frames' own checkpoints are protected: the
+      // builder's interior checkpoints (per-round lineage truncation)
+      // are transient and stay reapable
+      val dfs = build.map(Checkpoint(_))
+      val ids = dfs.map(Checkpoint.rddId).toSet
       protectedSet = protectedSet ++ ids
       cache.put(k, Entry(dfs, ids))
       while (cache.size > maxEntries) {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * Iterative centroid clustering over the embeddings table — the
  * reference's kMeansClassification / ModifiedKMeans family
@@ -94,7 +96,7 @@ object Clustering {
     val spark = emb.sparkSession
     import spark.implicits._
     val ev = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].localCheckpoint(true)
+      .as[(Long, Array[Float])].transform(Checkpoint(_))
     var cent: Array[(Long, Array[Double])] =
       ev.filter(_._1 < k).collect().sortBy(_._1)
         .map { case (id, a) => (id, a.map(_.toDouble)) }
@@ -156,12 +158,12 @@ object Clustering {
               maxK: Int, splitVar: Double): (DataFrame, DataFrame) = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val e = Similarity.exploded(emb).localCheckpoint(true)
+    val e = Similarity.exploded(emb).transform(Checkpoint(_))
     var c = e.where(col("vec_id") < k0)
       .select(col("vec_id").as("cluster"), col("pos"),
         col("ev").as("cv"))
-      .localCheckpoint(true)
-    var nextId = c.agg(max(col("cluster"))).head().getLong(0) + 1
+      .transform(Checkpoint(_))
+    var nextId = Checkpoint.range(c, "cluster").get._2 + 1
     for (_ <- 1 to iters) {
       val a = assign(e, c)
       val sizes = a.groupBy("cluster").agg(count(lit(1)).as("sz"))
@@ -172,7 +174,7 @@ object Clustering {
         .agg(round(avg(col("ev")), 6).as("cv"),
           round(avg(col("ev") * col("ev")) -
             avg(col("ev")) * avg(col("ev")), 6).as("vr"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val nClusters = stats.select("cluster").distinct().count()
       // widest (cluster, pos) by variance, ties to smaller ids
       val worst = stats
@@ -194,9 +196,9 @@ object Clustering {
               col("cv") + delta).otherwise(col("cv")), 6).as("cv"))
           nextId += 2
           others.unionByName(childA).unionByName(childB)
-            .localCheckpoint(true)
+            .transform(Checkpoint(_))
         case _ =>
-          stats.select("cluster", "pos", "cv").localCheckpoint(true)
+          stats.select("cluster", "pos", "cv").transform(Checkpoint(_))
       }
     }
     (assign(e, c), c)
@@ -302,7 +304,7 @@ object Clustering {
    * (s_ij - n * mean_i * mean_j) / (n - 1).
    */
   def covarianceMatrix(emb: DataFrame): DataFrame = {
-    val e = Similarity.exploded(emb).localCheckpoint(true)
+    val e = Similarity.exploded(emb).transform(Checkpoint(_))
     val means = e.groupBy("pos")
       .agg(sum(col("ev")).as("s"), count(lit(1)).as("n"))
       .select(col("pos"), (col("s") / col("n")).as("m"), col("n"))
@@ -365,7 +367,7 @@ object Clustering {
     val cdf = comps.zipWithIndex.toSeq.flatMap { case (v, k) =>
       v.zipWithIndex.map { case (w, p) => (k, p, w) }
     }.toDF("k", "pos", "w")
-    val e = Similarity.exploded(emb).localCheckpoint(true)
+    val e = Similarity.exploded(emb).transform(Checkpoint(_))
     val means = e.groupBy("pos")
       .agg((sum("ev") / count(lit(1))).as("m"))
     val cent = e.join(means, Seq("pos"))

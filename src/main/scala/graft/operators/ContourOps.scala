@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * Contour polyline assembly (TerrainAnalysisTools/Contour.java
  * marching + chaining, 1 410 LoC in the reference): iso-level edge
@@ -42,7 +44,7 @@ object ContourOps {
           .otherwise(col("c").cast("double")).as("x"),
         when(col("et") === "v", col("r") + col("t"))
           .otherwise(col("r").cast("double")).as("y"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     def side(et: String, dr: Int, dc: Int, nm: String) =
       nodes.where(col("et") === et).select(col("lvl"),
         (col("r") - dr).as("r"), (col("c") - dc).as("c"),
@@ -98,7 +100,7 @@ object ContourOps {
   def contourLines(grid: DataFrame, levels: Seq[Double]): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val segs = contourSegments(grid, levels).localCheckpoint(true)
+    val segs = contourSegments(grid, levels).transform(Checkpoint(_))
     val comp = GraphCC.label(
       segs.select(col("na").as("a"), col("nb").as("b")))
     val withComp = segs

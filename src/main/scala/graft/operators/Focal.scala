@@ -37,11 +37,12 @@ object Focal {
    */
   def contributions(grid: DataFrame, radius: Int, reflect: Boolean,
                     nRows: Long, nCols: Long): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
-    val offs = (-radius to radius)
-      .flatMap(dy => (-radius to radius).map(dx => (dy, dx)))
-      .toDF("dy", "dx")
+    // the kernel offsets as a literal array exploded per cell: the
+    // same rows as a cross join with an offsets table, with no
+    // broadcast job
+    val offs = array((-radius to radius).flatMap(dy =>
+      (-radius to radius).map(dx => struct(lit(dy).as("dy"),
+        lit(dx).as("dx")))): _*)
     // ghost copies at virtual mirror coordinates (edge reflection)
     val virt =
       if (!reflect) grid.select(col("r").as("vr"), col("c").as("vc"),
@@ -55,7 +56,7 @@ object Focal {
           when(col("c") >= nCols - radius, lit(2 * nCols) - col("c") - 1))))
         .select(explode(col("vrs")).as("vr"), col("vcs"), col("v"))
         .select(col("vr"), explode(col("vcs")).as("vc"), col("v"))
-    virt.crossJoin(broadcast(offs))
+    virt.select(col("vr"), col("vc"), col("v"), inline(offs))
       .select((col("vr") - col("dy")).as("r"),
         (col("vc") - col("dx")).as("c"),
         col("dy"), col("dx"), col("v").as("nv"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * Undirected connected components over Long node ids — hash-min label
  * propagation with pointer jumping, the same merge machinery as the
@@ -23,8 +25,8 @@ object GraphCC {
     * component's minimum node id. Isolated nodes can be added by
     * passing self-loops (a = b). */
   def label(edges: DataFrame): DataFrame = {
-    val e0 = edges.select(col("a"), col("b")).localCheckpoint(true)
-    if (e0.count() <= localMaxEdges) {
+    val e0 = edges.select(col("a"), col("b")).transform(Checkpoint(_))
+    if (Checkpoint.rows(e0) <= localMaxEdges) {
       val spark = e0.sparkSession
       import spark.implicits._
       return e0.as[(Long, Long)].coalesce(1).mapPartitions { it =>
@@ -53,12 +55,12 @@ object GraphCC {
     val sym = e0.where(col("a") =!= col("b")).unionByName(
         e0.where(col("a") =!= col("b"))
           .select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Checkpoint(_))
     var m = e0.select(col("a").as("node"))
       .unionByName(e0.select(col("b").as("node")))
       .distinct()
-      .select(col("node"), col("node").as("root")).localCheckpoint(true)
-    var changed = sym.limit(1).count() > 0
+      .select(col("node"), col("node").as("root")).transform(Checkpoint(_))
+    var changed = Checkpoint.rows(sym) > 0
     while (changed) {
       val viaNbr = sym
         .join(m.select(col("node").as("b"), col("root").as("rb")),
@@ -71,7 +73,7 @@ object GraphCC {
         .join(step.select(col("node").as("r2"), col("root").as("rr")),
           col("root") === col("r2"), "left")
         .select(col("node"), coalesce(col("rr"), col("root")).as("root"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       changed = jump
         .join(m.withColumnRenamed("root", "old"), Seq("node"))
         .where(col("root") =!= col("old")).limit(1).count() > 0

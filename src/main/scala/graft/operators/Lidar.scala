@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * LiDAR gridding family — the engine's re-expression of the
  * reference LidarTools: LiDAR_IDW_interpolation.java:612-780
@@ -122,7 +124,7 @@ object Lidar {
     val pairs = SpatialJoins.distanceJoin(pts, r, searchDist)
       .where(col("pid") =!= col("rpid"))
       .select(col("pid"), col("rpid"), col("rz"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val mda = pts.join(
         pairs.groupBy("pid").agg(min(col("rz")).as("__mn")),
         Seq("pid"), "left")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * Binary line morphology over full (r, c, b/v) grids — LineThinning
  * and ThickenRasterLine (ImageProcessingTools/LineThinning.java;
@@ -102,7 +104,7 @@ object Morphology {
         m = j.select(col("r"), col("c"),
           when(col("b") === 1L && cond, 0L).otherwise(col("b")).as("b"))
       }
-      m = m.localCheckpoint(true)
+      m = Checkpoint(m)
     }
     m
   }

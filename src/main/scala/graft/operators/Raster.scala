@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * Raster operators over the cell-relational form (r: Long, c: Long,
  * v: Double) — the engine's mapping of WhiteboxRaster grids
@@ -321,13 +323,13 @@ object Raster {
     import spark.implicits._
     val T = tileSize.toLong
     val cells = mask.select(col("r"), col("c")).as[(Long, Long)]
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // 1. sequential CCL inside each tile
     val labeled = cells
       .groupByKey(t => (Math.floorDiv(t._1, T), Math.floorDiv(t._2, T)))
       .flatMapGroups { (_, it) => localCcl(it.toSeq, width) }
       .toDF("r", "c", "lbl")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // 2. cross-tile label adjacency: only boundary cells probe their
     //    8 neighbours; same-tile neighbours already share a label
     val off = (-1 to 1).flatMap(dr => (-1 to 1).map(dc => (dr, dc)))

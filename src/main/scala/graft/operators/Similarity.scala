@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Checkpoint
+
 /**
  * Approximate/exact nearest-neighbour search over an embedding column
  * (Array[Float]) — the similarity-search stage of a training-data
@@ -137,7 +139,7 @@ object Similarity {
       .withColumn("arr", transform(sequence(lit(1), col("mx")),
         i => coalesce(element_at(col("__m"), i), lit(0.0))))
       .drop("__m")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // integer-quantized signature + band keys in ONE codegen'd pass
     // per row (graft.expr.SigBands): sig(hj) = sum_i round(arr_i*1000)
     // * coef(hj, i), bandKey(b) from the sign bits. Integer arithmetic
@@ -151,7 +153,7 @@ object Similarity {
       .select(col("vec_id"), posexplode(col("__bk")).as(Seq("band", "bkey")))
       // both sides of the banded self-join read this; compute the
       // signature fold once, not once per side
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val l = bands.select(col("band"), col("bkey"), col("vec_id").as("a"))
     val r = bands.select(col("band"), col("bkey"), col("vec_id").as("b"))
     val cand = l.join(r, Seq("band", "bkey")).where(col("a") < col("b"))
@@ -288,7 +290,7 @@ object Similarity {
     val en = emb.select(col("vec_id"), col("embedding"))
       .withColumn("nrm",
         sqrt(dotArr(col("embedding"), col("embedding"))))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val qn = queries.select(col("vec_id").as("q_id"),
         col("embedding").as("qemb"))
       .withColumn("qnrm", sqrt(dotArr(col("qemb"), col("qemb"))))

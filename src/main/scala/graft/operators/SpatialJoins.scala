@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUti
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.CellIndex
+import graft.core.{CellIndex, Checkpoint}
 import graft.expr.GeoFunctions._
 
 /**
@@ -155,7 +155,9 @@ object SpatialJoins extends Serializable {
 
   /** Planner row estimate of `df`, read without a job: the optimizer's
     * row count when it has one, else its size estimate over the row
-    * width. BigInt, because an unknown size is Long.MaxValue bytes. */
+    * width. Exact on a footed checkpoint (`core.Checkpoint`), and on
+    * a frame over one the size is its real bytes, not a guess. BigInt,
+    * because an unknown size is Long.MaxValue bytes. */
   private[graft] def estimatedRows(df: DataFrame): BigInt = {
     val plan = df.queryExecution.optimizedPlan
     plan.stats.rowCount.getOrElse(
@@ -296,14 +298,14 @@ object SpatialJoins extends Serializable {
     val b = keyed
       .withColumn("__cellF",
         latlng_to_cell(col(by), col(bx), lit(CellIndex.DefaultRes)))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val res =
       if (res0 > 0) res0
       else {
-        // ONE pass over the checkpointed build side for both density
-        // stats. The start resolution accounts for BOTH effects of
-        // duplicate-heavy data (many pages per gazetteer location —
-        // the web-scale norm):
+        // ONE pass over the checkpointed build side for the distinct
+        // cells; its row count comes with the checkpoint. The start
+        // resolution accounts for BOTH effects of duplicate-heavy data
+        // (many pages per gazetteer location — the web-scale norm):
         //  - density from the EFFECTIVE distinct-location count, not
         //    raw rows (raw count picks a resolution so fine that
         //    certification takes many deepening rounds);
@@ -312,10 +314,9 @@ object SpatialJoins extends Serializable {
         //    sizing the ring for k full locations at dup 1000 makes
         //    round 0 process ~1000x more candidates than the top-k
         //    can ever keep.
-        val r = b.agg(approx_count_distinct(col("__cellF")).as("n"),
-          count(lit(1)).as("c")).head()
-        val eff = math.max(r.getLong(0), 1L)
-        val dup = math.max(1.0, r.getLong(1).toDouble / eff)
+        val eff = math.max(
+          b.agg(approx_count_distinct(col("__cellF"))).head().getLong(0), 1L)
+        val dup = math.max(1.0, Checkpoint.rows(b).toDouble / eff)
         val neededLocs =
           math.max(1, math.ceil(kNeighbors / dup).toInt)
         resForKnn(eff, neededLocs)
@@ -332,11 +333,10 @@ object SpatialJoins extends Serializable {
     val topk = (kc: Column, ic: Column) =>
       graft.expr.SmallestKAgg.smallestK(kNeighbors)(kc, ic)
 
-    // Each round materializes its per-probe aggregate (localCheckpoint
+    // Each round materializes its per-probe aggregate (a checkpoint
     // truncates lineage) — without this the pending-probe plan embeds
-    // the prior round's join and grows exponentially. Checkpointed
-    // intermediates are freed at function end (trackedFree); only the
-    // small per-probe aggregates the result derives from are kept.
+    // the prior round's join and grows exponentially. The pending
+    // probes are checkpointed too; their row count ends the loop.
     // pending carries a branch-and-bound prune: `__bnd2` is the probe's
     // current k-th-neighbour distance² upper bound (found in an earlier
     // round but not yet certified). A build farther than the bound can
@@ -345,8 +345,8 @@ object SpatialJoins extends Serializable {
     // the kd-tree heap's maxDistance prune (KdTree.java:377-400).
     var pending = probe.select(col(probeId), col(px), col(py))
       .withColumn("__bnd2", lit(null).cast("double"))
-      .localCheckpoint(true)
-    var pendingCnt = pending.count()
+      .transform(Checkpoint(_))
+    var pendingCnt = Checkpoint.rows(pending)
     var acc: DataFrame = null
     var t = 0
     var done = false
@@ -404,7 +404,7 @@ object SpatialJoins extends Serializable {
           // (dist2, buildId) tie-break holds exactly.
           if (exact) lit(true)
           else col("__n") === kNeighbors && col("__maxd2") < lit(g2))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val resolved = agg.where(col("__ok"))
         .select(col(probeId), col("__tk.ks").as("__ks"),
           posexplode(col("__tk.ids")).as(Seq("__pos", buildId)))
@@ -415,28 +415,21 @@ object SpatialJoins extends Serializable {
       if (exact) {
         done = true
       } else {
-        // ONE tiny job over the checkpointed per-probe aggregate for
-        // the round's bookkeeping (replaces a separate
-        // pending.count() action): probes with zero candidates are
-        // absent from `agg` and stay pending with no bound.
-        val okCnt = agg.agg(
-          coalesce(sum(when(col("__ok"), 1L).otherwise(0L)), lit(0L))
-            .as("ok"))
-          .head().getLong(0)
-        pendingCnt -= okCnt
+        // unresolved probes tighten their bound to this round's k-th
+        // candidate distance (monotonically non-increasing); probes
+        // with zero candidates are absent from `agg` and stay pending
+        // with no bound. The checkpoint's row count is the round's
+        // bookkeeping, with no job of its own.
+        pending = pending.drop("__bnd2")
+          .join(agg.select(col(probeId), col("__ok"), col("__n"),
+              col("__maxd2")), Seq(probeId), "left_outer")
+          .where(col("__ok").isNull || !col("__ok"))
+          .select(col(probeId), col(px), col(py),
+            when(col("__n") === kNeighbors, col("__maxd2"))
+              .otherwise(lit(null).cast("double")).as("__bnd2"))
+          .transform(Checkpoint(_))
+        pendingCnt = Checkpoint.rows(pending)
         done = pendingCnt == 0
-        if (!done) {
-          // unresolved probes tighten their bound to this round's
-          // k-th candidate distance (monotonically non-increasing)
-          pending = pending.drop("__bnd2")
-            .join(agg.select(col(probeId), col("__ok"), col("__n"),
-                col("__maxd2")), Seq(probeId), "left_outer")
-            .where(col("__ok").isNull || !col("__ok"))
-            .select(col(probeId), col(px), col(py),
-              when(col("__n") === kNeighbors, col("__maxd2"))
-                .otherwise(lit(null).cast("double")).as("__bnd2"))
-            .localCheckpoint(true)
-        }
       }
       if (sys.env.contains("GRAFT_KNN_DEBUG")) {
         System.err.println(f"[knn] round $t resT=$resT " +

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /** A node of the weighted forest that [[Terrain.flowAccumD8]]
   * accumulates: weight `w` at cell (r, c), linked downstream to
   * (tr, tc) when `link` is set. A solved forest carries each node's
@@ -581,10 +583,11 @@ object Terrain {
    * The base case is one task over the whole forest, taken when the
    * forest has at most [[localFixpointMaxRows]] nodes or fits in one
    * tile. Level k + 1 holds at most (4T - 4) nodes per level-k tile,
-   * a bound taken from the extent of the top level (one aggregate
-   * job), so the number of Spark jobs depends only on the number of
-   * levels — one per squaring of T until a tile covers the grid —
-   * and not on how many tiles a flowpath crosses.
+   * a bound taken from the extent of the top level (read from the
+   * footed pointer checkpoint's statistics, no job), so the number of
+   * Spark jobs depends only on the number of levels — one per
+   * squaring of T until a tile covers the grid — and not on how many
+   * tiles a flowpath crosses.
    */
   def flowAccumD8(grid: DataFrame, tileSize: Int = 16): DataFrame = {
     require(tileSize >= 2,
@@ -601,6 +604,8 @@ object Terrain {
                                      tileSize: Int): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
+    // the memoized pointer grid is a footed checkpoint: its row count
+    // and r/c extent are read from its statistics, with no job
     val ptr = d8Pointer(grid)
     val cells = ptr.select(col("r").cast("long").as("r"),
         col("c").cast("long").as("c"),
@@ -608,12 +613,10 @@ object Terrain {
         (col("c") + perDir(dX)).cast("long").as("tc"),
         (col("ptr") =!= 0).as("link"), lit(1L).as("w"))
       .as[FlowNode]
-    val ext = cells.agg(count(lit(1)), min("r"), max("r"), min("c"),
-      max("c")).head()
-    val n = ext.getLong(0)
-    val extent = if (n == 0) (0L, 0L, 0L, 0L)
-      else (ext.getLong(1), ext.getLong(2), ext.getLong(3), ext.getLong(4))
-    accumulateForest(cells, n, extent, tileSize.toLong)
+    val extent = (for (r <- Checkpoint.range(ptr, "r");
+                       c <- Checkpoint.range(ptr, "c"))
+      yield (r._1, r._2, c._1, c._2)).getOrElse((0L, 0L, 0L, 0L))
+    accumulateForest(cells, Checkpoint.rows(ptr), extent, tileSize.toLong)
       .map(f => (f.r, f.c, f.w)).toDF("r", "c", "n_upslope")
   }
 
@@ -816,7 +819,7 @@ object Terrain {
       (col("r") +: col("c") +: col("v") +:
         (0 until 8).map(i => col(s"n$i"))) ++
         (0 until 8).map(f => sF(f).as(s"f$f")): _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val mx = greatest((0 until 8).map(f =>
       coalesce(col(s"f$f"), lit(-9.9999999e7))): _*)
     val chosen = (0 until 8).foldLeft(lit(-1)) { (acc, f) =>
@@ -831,7 +834,7 @@ object Terrain {
     withS.withColumn("__mx", mx)
       .where(col("__mx") > 0)
       .withColumn("__f", chosen)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
       .withColumn("__w2", perFacet(f =>
         when(s2(f) < 0, lit(0.0))
           .when(s2(f) > s1(f), lit(1.0))
@@ -906,21 +909,22 @@ object Terrain {
    * `__a` (the source's value) and the attribute columns, for the
    * distributed rounds, and `send(a, src, edge)` with the source and
    * edge attributes as doubles in column order, for the one-task
-   * rounds. The loop is not lazy: edges and cells are checkpointed
-   * and the cells counted (eager jobs) to pick the arm. Up to
+   * rounds. The loop is not lazy: edges and cells are footed
+   * checkpoints (one eager job each), and the arm is picked from the
+   * cells checkpoint's row count, which costs no job. Up to
    * [[localFixpointMaxRows]] cells the rounds run in one task (one
    * job when the result is used); above it each round is one shuffle
-   * of the cell relation, and every second round an eager
-   * `localCheckpoint` truncates the lineage. Output: (r, c, acc).
+   * of the cell relation, and every second round a checkpoint
+   * truncates the lineage. Output: (r, c, acc).
    */
   private def slotAccum(cellsIn: DataFrame, edgesIn: DataFrame,
                         rounds: Int)(sendCol: Column,
       send: (Double, Array[Double], Array[Double]) => Double): DataFrame = {
-    val edges = edgesIn.localCheckpoint(true)
-    val cells = cellsIn.localCheckpoint(true)
+    val edges = Checkpoint(edgesIn)
+    val cells = Checkpoint(cellsIn)
     val srcAttrs = cells.columns.toSeq.diff(Seq("r", "c", "seed"))
     val edgeAttrs = edges.columns.toSeq.diff(Seq("r", "c", "tr", "tc", "j"))
-    if (cells.count() <= localFixpointMaxRows) {
+    if (Checkpoint.rows(cells) <= localFixpointMaxRows) {
       val spark = cells.sparkSession
       import spark.implicits._
       def doubles(names: Seq[String]) =
@@ -991,7 +995,7 @@ object Terrain {
           }.as("acc") +: srcAttrs.map(col): _*)
       // frequent lineage truncation: nested join+pivot rounds blow up
       // the optimizer's constraint propagation (OOM past ~6 rounds)
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
+      if (i % 2 == 0 && i < rounds) acc = Checkpoint(acc)
     }
     acc.select(col("r"), col("c"), col("acc"))
   }
@@ -1090,7 +1094,7 @@ object Terrain {
     val nb = gatherNeighbors(grid).select(
       col("r") +: col("c") +: col("v") +:
         (0 until 8).map(m => col(s"n${7 - m}").as(s"p$m")): _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     def p(m: Int) = col(s"p${m % 8}")
     def nzd(m: Int): Double = {
       val m1 = (m + 1) % 8
@@ -1109,7 +1113,7 @@ object Terrain {
             (lit(mXd(m1).toDouble) * z1 - lit(mXd(m).toDouble) * z2)
               .as(s"ny$m"))
         }: _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // stage 2: unclamped direction + algebraic slope magnitude
     val withH = withN.select(
       (col("r") +: col("c") +: col("v") +:
@@ -1125,7 +1129,7 @@ object Terrain {
           val hs0 = -(sqrt(lit(1.0) - xq * xq) / xq)
           Seq(hr0.as(s"hr0_$m"), hs0.as(s"hs0_$m"))
         }: _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // stage 3: wedge clamp + single-neighbour fallback
     // (FlowAccumMDInf.java:461-501)
     def hrhs(m: Int): (Column, Column) = {
@@ -1160,7 +1164,7 @@ object Terrain {
           val (hr, hs) = hrhs(m)
           Seq(hr.as(s"hr$m"), hs.as(s"hs$m"))
         }): _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     def hrc(m: Int) = col(s"hr${m % 8}")
     def hsc(m: Int) = col(s"hs${m % 8}")
     // valley tests (FlowAccumMDInf.java:504-529): a facet flows iff
@@ -1184,7 +1188,7 @@ object Terrain {
         (0 until 8).map(m => pow(col(s"vl$m"), lit(hExp)))
           .reduce(_ + _))
       .where(col("__vsum") > 0)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     def wgt(m: Int) = pow(col(s"vl$m"), lit(hExp)) / col("__vsum")
     // rFacet[7] == 0 -> 2π (FlowAccumMDInf.java:547-549) so facet 7's
     // angular split sees north as 2π, not 0
@@ -1521,7 +1525,7 @@ object Terrain {
   def sideMdinf(grid: DataFrame, flowAccum: DataFrame,
                 streams: DataFrame, caThr: Double,
                 hExp: Double = 1.0): DataFrame = {
-    val st = streams.select(col("r"), col("c")).localCheckpoint(true)
+    val st = streams.select(col("r"), col("c")).transform(Checkpoint(_))
     // per-cell info code: 16*isStream + D8 dir (8 = no downslope)
     val info = d8DirMdinf(grid)
       .join(st.withColumn("__s", lit(1)), Seq("r", "c"), "left")
@@ -1532,7 +1536,7 @@ object Terrain {
     val gath = gatherNeighbors(info).select(
       col("r") +: col("c") +: col("v").cast("int").as("code") +:
         (0 until 8).map(m => col(s"n${7 - m}").cast("int").as(s"q$m")): _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // MDInf edges from non-stream sources into stream targets, with
     // the source's input flow accumulation
     val edges = mdinfEdges(grid, hExp)
@@ -1589,7 +1593,7 @@ object Terrain {
           when(zcpA * zcpB > 0, zcpB > 0).otherwise(zcpC > 0)
             .as(s"s$i")
         }: _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val hasTrib = (0 until 8).map(i => col(s"t$i")).reduce(_ || _)
     val firstS = (0 until 8).reverse
       .foldLeft(lit(null).cast("boolean")) { (acc, i) =>
@@ -1665,7 +1669,7 @@ object Terrain {
         (col("r") + mYdOf(col("dir"))).as("tr"),
         (col("c") + mXdOf(col("dir"))).as("tc"),
         ((col("dir") + 4) % 8).cast("int").as("j"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // merge: one edge row per (source, target) carrying both the
     // MDInf portion (if any) and the D8-steepest flag (if any) —
     // the threshold on the source's value selects which one sends
@@ -1837,7 +1841,7 @@ object Terrain {
       .select((col("v") + stationH).as("zv"))
     val t = grid.crossJoin(broadcast(vz))
       .withColumn("n", greatest(abs(col("r") - vr), abs(col("c") - vc)))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val s = t.where(col("n") >= 2)
       .withColumn("k", explode(sequence(lit(1L), col("n") - 1)))
       .withColumn("xr",
@@ -1905,7 +1909,7 @@ object Terrain {
     val t = grid.crossJoin(broadcast(st))
       .withColumn("n",
         greatest(abs(col("r") - col("sr")), abs(col("c") - col("sc"))))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val s = t.where(col("n") >= 2)
       .withColumn("k", explode(sequence(lit(1L), col("n") - 1)))
       .withColumn("xr", col("sr") +
@@ -1974,16 +1978,16 @@ object Terrain {
       graft.core.Memo.key(grid, s"streamGraph:$threshold"),
       grid.sparkSession) {
       val stream = extractStreams(grid, threshold).select("r", "c")
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       // checkpoint the edge decode: embedding the full stencil-pivot
       // plan twice in the joins below explodes whole-stage codegen
-      val edges = d8Edges(grid).localCheckpoint(true)
+      val edges = d8Edges(grid).transform(Checkpoint(_))
       val sedges = edges
         .join(stream, Seq("r", "c"))
         .join(stream.select(col("r").as("tr"), col("c").as("tc")),
           Seq("tr", "tc"))
         .select("r", "c", "tr", "tc")
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val indeg = sedges.groupBy("tr", "tc").agg(count(lit(1)).as("n"))
       Seq(stream, sedges, indeg)
     }
@@ -2013,10 +2017,9 @@ object Terrain {
       lit(DiagNano)).otherwise(lit(1000000000L))
     val edges = sedges0
       .select(col("r"), col("c"), col("tr"), col("tc"), dNano.as("d"))
-      .localCheckpoint(true)
-    val base = stream.localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
-      val tagged = base
+      .transform(Checkpoint(_))
+    if (Checkpoint.rows(stream) <= localFixpointMaxRows) {
+      val tagged = stream
         .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
           lit(-1L).as("d"))
         .unionByName(edges)
@@ -2057,7 +2060,7 @@ object Terrain {
           (cells(i)._1, cells(i)._2, tot(i), hd(i)))
       }.toDF("r", "c", "total_upstream_nano", "head_dist_nano")
     }
-    var acc = base.withColumn("tot", lit(0L)).withColumn("hd", lit(0L))
+    var acc = stream.withColumn("tot", lit(0L)).withColumn("hd", lit(0L))
     for (i <- 1 to rounds) {
       val contrib = edges
         .join(acc.select(col("r"), col("c"), col("tot").as("__t"),
@@ -2065,11 +2068,11 @@ object Terrain {
         .groupBy(col("tr").as("r"), col("tc").as("c"))
         .agg(sum(col("__t") + col("d")).as("it"),
           max(col("__h") + col("d")).as("ih"))
-      acc = base.join(contrib, Seq("r", "c"), "left")
+      acc = stream.join(contrib, Seq("r", "c"), "left")
         .select(col("r"), col("c"),
           coalesce(col("it"), lit(0L)).as("tot"),
           coalesce(col("ih"), lit(0L)).as("hd"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
+      if (i % 2 == 0 && i < rounds) acc = Checkpoint(acc)
     }
     acc.select(col("r"), col("c"), col("tot").as("total_upstream_nano"),
       col("hd").as("head_dist_nano"))
@@ -2092,16 +2095,16 @@ object Terrain {
                      rounds: Int = 64): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val ptr = d8Pointer(grid).localCheckpoint(true)
+    val ptr = d8Pointer(grid)
     val edges = d8EdgesFromPtr(ptr)
       .join(grid.select(col("r").as("tr"), col("c").as("tc"),
         col("v").as("tz")), Seq("tr", "tc"))
       .select(col("r"), col("c"), col("tr"), col("tc"), col("tz"),
         when(abs(col("tr") - col("r")) + abs(col("tc") - col("c")) === 2,
           lit(DiagNano)).otherwise(lit(1000000000L)).as("stepn"))
-      .localCheckpoint(true)
-    val base = grid.select(col("r"), col("c"), col("v")).localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
+      .transform(Checkpoint(_))
+    val base = grid.select(col("r"), col("c"), col("v")).transform(Checkpoint(_))
+    if (Checkpoint.rows(base) <= localFixpointMaxRows) {
       val tagged = base
         .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
           col("v").as("tz"), lit(-1L).as("stepn"))
@@ -2180,8 +2183,12 @@ object Terrain {
           .when(col("tr").isNull && col("ns") + col("nd") > 0, lit(0.0))
           .otherwise(lit(null).cast("double")).as("out"),
         (col("tr").isNull || col("zst") - col("tz") >= d).as("done"))
+      // at most one partition per core: when the edge join is a
+      // broadcast, both sides of the union keep st's partitions, and
+      // the count would double every round
       st = st.where(col("done")).unionByName(adv)
-      if (i % 2 == 0 && i < rounds) st = st.localCheckpoint(true)
+        .coalesce(spark.sparkContext.defaultParallelism)
+      if (i % 2 == 0 && i < rounds) st = Checkpoint(st)
     }
     st.where(col("out").isNotNull)
       .select(col("sr").as("r"), col("sc").as("c"),
@@ -2215,7 +2222,7 @@ object Terrain {
         coalesce(col("pr"), col("r")).as("tr"),
         coalesce(col("pc"), col("c")).as("tc"), lit(0L).as("ns"),
         lit(0L).as("nd"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     resolvePointers(nxt).select(col("r"), col("c"),
       (col("tr") * width + col("tc")).as("link_id"))
   }
@@ -2236,7 +2243,7 @@ object Terrain {
                       width: Long): DataFrame = {
     val (stream, sedges, indeg) = streamGraph(grid, threshold)
     val links = linkFromGraph(stream, sedges, indeg, width)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     polylinesFromLinks(sedges, links)
   }
 
@@ -2305,7 +2312,7 @@ object Terrain {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (stream, sedges, indeg) = streamGraph(grid, threshold)
     val links = linkFromGraph(stream, sedges, indeg, width)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val cgraph = sedges
       .join(links.select(col("r"), col("c"), col("link_id").as("child")),
         Seq("r", "c"))
@@ -2423,7 +2430,7 @@ object Terrain {
     val mags = linkTask(linkIds, cgraph) { (allIds, children, _) =>
         val mag = shreveFixpoint(allIds, children)
         allIds.iterator.map(id => (id, mag(id)))
-      }.toDF("link_id", "magnitude").localCheckpoint(true)
+      }.toDF("link_id", "magnitude").transform(Checkpoint(_))
     // trunk: max-(magnitude, -link_id) child of the link's parent; a
     // link with no parent (outlet) is trunk
     val withParent = cgraph
@@ -2522,7 +2529,7 @@ object Terrain {
                 width: Long): DataFrame = {
     val (stream, sedges, indeg) = streamGraph(grid, threshold)
     val links = linkFromGraph(stream, sedges, indeg, width)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     resolvePointers(d8Next(d8Pointer(grid), Some(stream)))
       .join(links.select(col("r").as("tr"), col("c").as("tc"),
         col("link_id")), Seq("tr", "tc"))
@@ -2571,7 +2578,7 @@ object Terrain {
       .where(coalesce(col("n"), lit(0L)) === 0)
       .select(col("r").as("tr"), col("c").as("tc"),
         (col("r") * width + col("c")).as("head_id"))
-    val edges = d8Edges(grid).localCheckpoint(true)
+    val edges = d8Edges(grid).transform(Checkpoint(_))
     val ridge = grid.select(col("r"), col("c"), col("v"))
       .join(edges.select(col("tr").as("r"), col("tc").as("c"))
         .distinct().withColumn("__in", lit(true)),
@@ -2633,7 +2640,7 @@ object Terrain {
         ((round(col("v") * 10).cast("long") * col("cnt") - col("sum10"))
           <= lit(dfmeThreshold10) * col("cnt")).as("m"),
         coalesce(col("hp0"), lit(false)).as("hp"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     def dirResult(dir: Int, keyE: Column, posE: Column,
                   diag: Boolean): DataFrame = {
       val resL = if (diag) Sq2 else 1.0
@@ -2657,7 +2664,7 @@ object Terrain {
       val rb = runs.join(st, Seq("key", "a")).join(en, Seq("key", "b"))
         .withColumn("len",
           (col("b") - col("a") + 3).cast("double") * resL)
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val zz = base.select(col("key"), col("pos").as("zp"),
         col("z").as("zv"))
       // depth profiles only for runs short enough to ever flag
@@ -2727,8 +2734,8 @@ object Terrain {
     import spark.implicits._
     val (stream, sedges, indeg) = streamGraph(grid, threshold)
     val links = linkFromGraph(stream, sedges, indeg, width)
-      .localCheckpoint(true)
-    val ptr = d8Pointer(grid).localCheckpoint(true)
+      .transform(Checkpoint(_))
+    val ptr = d8Pointer(grid)
     val sid = links
       .join(indeg.select(col("tr").as("r"), col("tc").as("c"),
         col("n")), Seq("r", "c"), "left")
@@ -2760,7 +2767,7 @@ object Terrain {
         col("rp"), col("xr"), col("xc"),
         (col("__in").isNotNull && col("__st").isNull).as("nonstream"),
         (col("xptr") === col("inflow")).as("inflowing"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // the right scan stops at the first stream/off-grid neighbour
     // AFTER a non-stream one; the left scan covers the other 7 dirs
     val m1 = nb.groupBy("r", "c")
@@ -2791,7 +2798,7 @@ object Terrain {
         coalesce(col("mr.lbl"), col("ml.lbl")).as("lbl"))
     val seeds = bank
       .unionByName(sid.select(col("r"), col("c"), col("sid").as("lbl")))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val resolved = resolvePointers(d8Next(ptr, Some(seeds)))
       .join(seeds.select(col("r").as("tr"), col("c").as("tc"),
         col("lbl")), Seq("tr", "tc"))
@@ -2832,7 +2839,7 @@ object Terrain {
     // 9-aggregate neighbour pivot twice AND blew the fused stage past
     // janino's 64 KB limit (failed compile + interpreted fallback on
     // every action)
-    val ptr = d8Pointer(grid).localCheckpoint(true)
+    val ptr = d8Pointer(grid)
     val cnt = d8EdgesFromPtr(ptr)
       .groupBy(col("tr").as("r"), col("tc").as("c"))
       .agg(count(lit(1)).as("n"))
@@ -2875,7 +2882,7 @@ object Terrain {
     require(threshold >= 2, "isobasin: threshold must be >= 2")
     val spark = grid.sparkSession
     import spark.implicits._
-    val ptr = d8Pointer(grid).localCheckpoint(true)
+    val ptr = d8Pointer(grid)
     val ca = flowAccumD8(grid)
     val cells = ptr.join(ca, Seq("r", "c"))
       .select(col("r"), col("c"), col("ptr"),
@@ -3045,9 +3052,9 @@ object Terrain {
     val edges = d8Edges(grid)
       .select(col("r"), col("c"), col("tr"), col("tc"),
         dNano.as("d"))
-      .localCheckpoint(true)
-    val base = grid.select(col("r"), col("c")).localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
+      .transform(Checkpoint(_))
+    val base = grid.select(col("r"), col("c")).transform(Checkpoint(_))
+    if (Checkpoint.rows(base) <= localFixpointMaxRows) {
       // one-task exact pass: Kahn order over the D8 DAG
       val tagged = base
         .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
@@ -3107,7 +3114,7 @@ object Terrain {
           coalesce(col("im"), lit(0L)).as("mx"),
           (lit(1L) + coalesce(col("in"), lit(0L))).as("cnt"),
           coalesce(col("is"), lit(0L)).as("sm"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
+      if (i % 2 == 0 && i < rounds) acc = Checkpoint(acc)
     }
     acc.select(col("r"), col("c"), col("mx").as("max_len_nano"),
       col("cnt").as("n_paths"), col("sm").as("sum_len_nano"))
@@ -3144,7 +3151,7 @@ object Terrain {
     def tileOf(r: Long, c: Long): (Long, Long) =
       (Math.floorDiv(r, T), Math.floorDiv(c, T))
     val cells = grid.select(col("r"), col("c"), col("v"))
-      .as[(Long, Long, Double)].localCheckpoint(true)
+      .as[(Long, Long, Double)].transform(Checkpoint(_))
     val byTile = cells.groupByKey(t => tileOf(t._1, t._2))
 
     // halo packet: a filled-level estimate for cell (r, c), addressed
@@ -3157,7 +3164,7 @@ object Terrain {
         halos.groupByKey(h => (h._1, h._2))) { (tile, cellIt, haloIt) =>
           FlowTiles.localFlood(tile, cellIt.toSeq,
             haloIt.map(h => (h._3, h._4, h._5)).toSeq, T, nRows, nCols)
-        }.localCheckpoint(true)
+        }.transform(Checkpoint(_))
       // rows with sentinel tile (-1) are cell outputs; others are halos
       outputs = next.filter(_._1 == -1L).map(o => (o._3, o._4, o._5))
       val newHalos = next.filter(_._1 >= 0L)
@@ -3167,7 +3174,7 @@ object Terrain {
           Seq("t1", "t2", "r", "c"), "left")
         .where(col("olvl").isNull || col("lvl") =!= col("olvl"))
         .limit(1).count()
-      halos = newHalos.localCheckpoint(true)
+      halos = Checkpoint(newHalos)
       converged = changed == 0
     }
     outputs.toDF("r", "c", "filled")
@@ -3198,7 +3205,7 @@ object Terrain {
       .select(col("r"), col("c"), col("v"),
         coalesce(col("isSrc"), lit(false)).as("isSrc"))
       .as[(Long, Long, Double, Boolean)]
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val byTile = cells.groupByKey(t => tileOf(t._1, t._2))
     var halos = spark
       .emptyDataset[(Long, Long, Long, Long, Double, Double, Long)]
@@ -3211,7 +3218,7 @@ object Terrain {
           FlowTiles.localCostDijkstra(tile, cellIt.toSeq,
             haloIt.map(h => (h._3, h._4, h._5, h._6, h._7)).toSeq,
             T, nRows, nCols)
-        }.localCheckpoint(true)
+        }.transform(Checkpoint(_))
       outputs = next.filter(_._1 == -1L)
         .map(o => (o._3, o._4, o._5, o._7))
       val newHalos = next.filter(_._1 >= 0L)
@@ -3221,7 +3228,7 @@ object Terrain {
         .where(col("olvl").isNull || col("lvl") =!= col("olvl") ||
           col("src") =!= col("osrc"))
         .limit(1).count()
-      halos = newHalos.localCheckpoint(true)
+      halos = Checkpoint(newHalos)
       converged = changed == 0
     }
     outputs.toDF("r", "c", "acc", "alloc")
@@ -3249,7 +3256,7 @@ object Terrain {
     import spark.implicits._
     val acc6 = costAccumulation(cost, sources, nRows, nCols)
       .select(col("r"), col("c"), round(col("acc"), 6).as("a6"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val withCost = acc6.join(cost, Seq("r", "c"))
     val nbr = withCost
       .select(col("r").as("nr"), col("c").as("nc"),
@@ -3272,13 +3279,13 @@ object Terrain {
         struct(col("vl"), col("i"))).as("p"))
       .select(col("r"), col("c"), col("p.nr").as("tr"),
         col("p.nc").as("tc"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val base = acc6.select(col("r"), col("c"))
       .join(dests.select(col("r"), col("c"), lit(1L).as("__d")),
         Seq("r", "c"), "left")
       .select(col("r"), col("c"), coalesce(col("__d"), lit(0L)).as("load"))
-      .localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
+      .transform(Checkpoint(_))
+    if (Checkpoint.rows(base) <= localFixpointMaxRows) {
       val tagged = base
         .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
           col("load"), lit(true).as("isCell"))
@@ -3328,7 +3335,7 @@ object Terrain {
       acc = base.join(contrib, Seq("r", "c"), "left")
         .select(col("r"), col("c"),
           (col("load") + coalesce(col("in"), lit(0L))).as("cnt"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
+      if (i % 2 == 0 && i < rounds) acc = Checkpoint(acc)
     }
     acc.where(col("cnt") > 0)
       .select(col("r"), col("c"), col("cnt").as("n_paths"))
@@ -3374,7 +3381,7 @@ object Terrain {
    * paths re-scan it).
    */
   private[graft] def resolvePointers(next0: DataFrame): DataFrame = {
-    if (next0.count() <= localFixpointMaxRows) {
+    if (Checkpoint.rows(next0) <= localFixpointMaxRows) {
       val spark = next0.sparkSession
       import spark.implicits._
       return next0
@@ -3423,7 +3430,7 @@ object Terrain {
         .select(col("r"), col("c"), col("ttr").as("tr"),
           col("ttc").as("tc"), (col("ns") + col("hns")).as("ns"),
           (col("nd") + col("hnd")).as("nd"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       val moved = doubled.join(next.select(col("r"), col("c"),
           col("tr").as("otr"), col("tc").as("otc"),
           col("ns").as("ons"), col("nd").as("ond")), Seq("r", "c"))
@@ -3453,7 +3460,7 @@ object Terrain {
         when(stop, col("c")).otherwise(col("c") + perDir(dX)).as("tc"),
         when(!stop && !diag, 1L).otherwise(0L).as("ns"),
         when(!stop && diag, 1L).otherwise(0L).as("nd"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
   }
 
   /**
@@ -3934,7 +3941,7 @@ object Terrain {
       // memoized on the GRID plan (the four flowpath tools all derive
       // the identical closure from the same DEM per session; keying
       // on the checkpointed pointer would never hit)
-      val ptr = d8Pointer(grid).localCheckpoint(true)
+      val ptr = d8Pointer(grid)
       closure(ptr, d8EdgesFromPtr(ptr).withColumn("dn", stepNano))
     }
 
@@ -3948,8 +3955,8 @@ object Terrain {
         col("r"), col("c"), lit(0L).as("dn"))
       .unionByName(edges.select(col("r").as("sr"), col("c").as("sc"),
         col("tr").as("r"), col("tc").as("c"), col("dn")))
-      .localCheckpoint(true)
-    var n = r.count()
+      .transform(Checkpoint(_))
+    var n = Checkpoint.rows(r)
     var converged = false
     while (!converged) {
       val hop = r.select(col("sr").as("hr"), col("sc").as("hc"),
@@ -3958,8 +3965,8 @@ object Terrain {
         .join(hop, col("r") === col("hr") && col("c") === col("hc"))
         .select(col("sr"), col("sc"), col("r2").as("r"),
           col("c2").as("c"), (col("dn") + col("d2")).as("dn"))
-        .unionByName(r).distinct().localCheckpoint(true)
-      val n2 = doubled.count()
+        .unionByName(r).distinct().transform(Checkpoint(_))
+      val n2 = Checkpoint.rows(doubled)
       converged = n2 == n
       n = n2
       r = doubled
@@ -3979,8 +3986,8 @@ object Terrain {
    * argmin is the true junction and q's distance rides along).
    */
   def branchLength(grid: DataFrame, nRows: Long, nCols: Long): DataFrame = {
-    val ptr = d8Pointer(grid).localCheckpoint(true)
-    val reach = flowpathClosure(grid).localCheckpoint(true)
+    val ptr = d8Pointer(grid)
+    val reach = flowpathClosure(grid)
     val spark = grid.sparkSession
     import spark.implicits._
     // E, SE, S, SW (BranchLength.java's testByte c = 1..4), in-grid
@@ -3991,7 +3998,7 @@ object Terrain {
         (col("r") + col("qdy")).as("qr"), (col("c") + col("qdx")).as("qc"))
       .join(cells.select(col("r").as("qr"), col("c").as("qc")),
         Seq("qr", "qc"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val ra = reach.select(col("sr").as("pr"), col("sc").as("pc"),
       col("r").as("jr"), col("c").as("jc"), col("dn").as("d1"))
     val rb = reach.select(col("sr").as("qr"), col("sc").as("qc"),
@@ -4028,7 +4035,7 @@ object Terrain {
   def findParallelFlow(grid: DataFrame): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val ptr = d8Pointer(grid).localCheckpoint(true)
+    val ptr = d8Pointer(grid)
     val offs = (0 until 8).map(i =>
       (dY(i), dX(i), 1L << i, 1L << ((i + 4) % 8)))
       .toDF("dy", "dx", "outv", "inv")
@@ -4085,7 +4092,7 @@ object Terrain {
     val creek = extractStreams(grid, threshold)
       .join(grid, Seq("r", "c"))
       .select(col("r"), col("c"), col("v"), col("n_upslope").as("area"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // MedianUpstreamArea.java:45-47 stencil (N-first, counter-
     // clockwise) with its own dd distances
     val xd = Seq(0, -1, -1, -1, 0, 1, 1, 1)
@@ -4106,7 +4113,7 @@ object Terrain {
     val edges = cand.withColumn("rn", row_number().over(firstMax))
       .where(col("rn") === 1)
       .select(col("r"), col("c"), col("nr").as("tr"), col("nc").as("tc"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val rch = closure(creek, edges.withColumn("dn", lit(0L)))
     rch.join(creek.select(col("r").as("sr"), col("c").as("sc"),
         col("area")), Seq("sr", "sc"))
@@ -4155,12 +4162,12 @@ object Terrain {
     val indeg = indeg0.toDF("tr", "tc", "n")
     val heads = stream.join(indeg.select(col("tr").as("r"),
         col("tc").as("c")), Seq("r", "c"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // upstream headwater count via the full-grid flowpath closure:
     // accumulation is monotone downstream, so a stream headwater's
     // D8 path never leaves the stream — cell X has headwater h
     // upstream (in the stream graph) iff X lies on h's flowpath
-    val ptr = d8Pointer(grid).localCheckpoint(true)
+    val ptr = d8Pointer(grid)
     val hk = flowpathClosure(grid)
       .join(heads.select(col("r").as("sr"), col("c").as("sc")),
         Seq("sr", "sc"))
@@ -4194,7 +4201,7 @@ object Terrain {
                     increment: Double): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val ws = watershed(grid, width).localCheckpoint(true)
+    val ws = watershed(grid, width).transform(Checkpoint(_))
     val offs = (0 until 8).map(i => (dY(i), dX(i))).toDF("dy", "dx")
     val same = ws.crossJoin(broadcast(offs))
       .join(ws.select(col("r").as("nr"), col("c").as("nc"),
@@ -4364,12 +4371,12 @@ object Terrain {
         val gauss = sqrt(lit(-2.0) * log(u1)) *
           cos(lit(2.0 * math.Pi) * u2)
         val demE = grid.select(col("r"), col("c"),
-          (col("v") + lit(rmse) * gauss).as("v")).localCheckpoint(true)
+          (col("v") + lit(rmse) * gauss).as("v")).transform(Checkpoint(_))
         fillDepressions(demE, nRows, nCols, memoize = false)
           .join(demE, Seq("r", "c"))
           .where(col("v") < col("filled"))
           .select(col("r"), col("c"))
-          .localCheckpoint(true)
+          .transform(Checkpoint(_))
       }
     }
     val masks = futs.map(Await.result(_, Duration.Inf))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * Large-scale training-data pipeline operators over the `documents`
  * table (doc_id, text, lang, source, n_chars) — the engine's webtext
@@ -201,7 +203,7 @@ object TextOps {
         min(col("doc_id")).as("rep"),
         sort_array(collect_list(col("doc_id"))).as("members"))
       .select("ts", "rep", "members")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
 
     // intra-group pairs: identical sets, jacc exactly 1.0 (>=  any t)
     val intra = groups.where(size(col("members")) > 1)

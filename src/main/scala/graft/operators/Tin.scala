@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * TIN construction (ConstructTIN.groovy) + Voronoi adjacency
  * (VoronoiDiagram.java dual) by the empty-circumcircle definition: a
@@ -47,7 +49,7 @@ object Tin {
     * ties resolve to "not inside" identically on both engines. */
   def delaunayBrute(points: DataFrame): DataFrame = {
     val p = points.select(col("pid"), col("px"), col("py"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     def pAs(n: String) = p.select(col("pid").as(s"i$n"),
       col("px").as(s"x$n"), col("py").as(s"y$n"))
     val triples = pAs("a")
@@ -56,7 +58,7 @@ object Tin {
       .withColumn("__o", orient(col("xa"), col("ya"), col("xb"),
         col("yb"), col("xc"), col("yc")))
       .where(col("__o") =!= 0)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val withD = triples.join(pAs("d"),
       col("id") =!= col("ia") && col("id") =!= col("ib") &&
         col("id") =!= col("ic"))
@@ -76,7 +78,7 @@ object Tin {
     * another group's sites). */
   def delaunayGrouped(points: DataFrame): DataFrame = {
     val p = points.select(col("gid"), col("pid"), col("px"), col("py"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     def pAs(n: String) = p.select(col("gid").as(s"g$n"),
       col("pid").as(s"i$n"), col("px").as(s"x$n"), col("py").as(s"y$n"))
     val triples = pAs("a")
@@ -87,7 +89,7 @@ object Tin {
       .where(col("__o") =!= 0)
       .drop("gb", "gc")
       .withColumnRenamed("ga", "gid")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val withD = triples.join(pAs("d"),
       col("gid") === col("gd") && col("id") =!= col("ia") &&
         col("id") =!= col("ib") && col("id") =!= col("ic"))

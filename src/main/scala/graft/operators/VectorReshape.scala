@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * Geometry-restructure family (VectorTools ExtractNodes.java,
  * PolygonsToLines.java, Scripts/MultipartsToSingleparts.groovy /
@@ -121,7 +123,7 @@ object VectorReshape {
         (col("ax") - col("bx")) * (col("ax") - col("bx")) +
           (col("ay") - col("by")) * (col("ay") - col("by")) <= d2)
       .select(col("cid"), col("nid"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val rng = nb.groupBy("cid")
       .agg((max("nid") - min("nid")).as("rng"))
     val nrm = nb.join(rng, Seq("cid"))
@@ -178,7 +180,7 @@ object VectorReshape {
         col("cx"), col("cy"),
         ((col("xmax") - col("xmin")) *
           (col("ymax") - col("ymin"))).as("area"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val qual = near.groupBy("lake_id")
       .agg(count(lit(1)).as("n"), min(col("area")).as("area"))
       .where(col("n") >= 2 && col("area") <= areaThreshold)
@@ -277,7 +279,7 @@ object VectorReshape {
       .where(col("rk") === 1).join(mid, Seq("fid"))
       .where(lit(1.0) - least(col("xaxis"), col("yaxis")) /
         greatest(col("xaxis"), col("yaxis")) > elongThreshold)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // long-axis end points in the rotated frame, rotated back
     val exr1 = when(col("xaxis") >= col("yaxis"), col("w"))
       .otherwise(col("w") + col("xaxis") / 2)
@@ -298,7 +300,7 @@ object VectorReshape {
         struct(w1(0).as("ex"), w1(1).as("ey")),
         struct(w2(0).as("ex"), w2(1).as("ey")))).as("p"))
       .select(col("fid"), col("p.ex").as("ex"), col("p.ey").as("ey"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val links = ends.join(ends.select(col("fid").as("f2"),
         col("ex").as("x2"), col("ey").as("y2")),
         col("f2") =!= col("fid") &&

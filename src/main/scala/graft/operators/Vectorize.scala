@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoint
+
 /**
  * RasterToVectorPolygons (ConversionTools/RasterToVectorPolygons
  * .java:217-430): equal-value patches become polygons whose boundary
@@ -34,12 +36,12 @@ object Vectorize {
     import spark.implicits._
     val T = tileSize.toLong
     val typed = cells.select(col("r"), col("c"), col("cls"))
-      .as[(Long, Long, Long)].localCheckpoint(true)
+      .as[(Long, Long, Long)].transform(Checkpoint(_))
     val labeled = typed
       .groupByKey(t => (Math.floorDiv(t._1, T), Math.floorDiv(t._2, T)))
       .flatMapGroups { (_, it) => localCcl4(it.toSeq, width) }
       .toDF("r", "c", "cls", "lbl")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val off = Seq((-1, 0), (1, 0), (0, -1), (0, 1)).toDF("dr", "dc")
     val boundary = labeled.where(
       pmod(col("r"), lit(T)) === 0 || pmod(col("r"), lit(T)) === T - 1 ||
@@ -107,7 +109,7 @@ object Vectorize {
                        tileSize: Int = 16): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
-    val comps = clumpByValue(cells, width, tileSize).localCheckpoint(true)
+    val comps = clumpByValue(cells, width, tileSize).transform(Checkpoint(_))
     val lab = comps.select(col("r"), col("c"), col("cls"),
       col("comp_id"))
     // exposed sides: neighbor missing OR different component.

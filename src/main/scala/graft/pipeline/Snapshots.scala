@@ -110,14 +110,15 @@ object Snapshots {
       df.withColumn("part",
           pmod(hash(col(bucketCol)), lit(numParts)))
         .where(col("part").isin(todo: _*))
-        // write-side clustering (the north rule's explicit
-        // repartitionByRange): one task per pending part with rows
-        // range-clustered by the bucket key inside it — exactly one
-        // file per part directory (instead of one per upstream task
-        // per part) and parquet min/max column stats that let a
-        // cell-range scan prune whole row groups
-        .repartitionByRange(math.max(todo.size, 1),
-          col("part"), col(bucketCol))
+        // write-side clustering: hash partitioning puts a row in task
+        // pmod(murmur3(bucket, 42), numParts), which is its `part`, so
+        // task k writes exactly the one file of part k (committed
+        // parts' tasks get no rows and write nothing). A repartition
+        // with a partition count is not coalesced by AQE, and unlike a
+        // range repartition it samples nothing. Sorting by the bucket
+        // key inside the task gives parquet min/max column stats that
+        // let a cell-range scan prune whole row groups
+        .repartition(numParts, col(bucketCol))
         .sortWithinPartitions(col("part"), col(bucketCol))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -38,6 +38,14 @@ class BuildJobsSpec extends AnyFunSuite {
       .foreach(q => assert(buildJobs(q) === 0, q))
   }
 
+  test("geo_flow_accum builds with at most 3 jobs") {
+    // the pointer checkpoint (neighbour shuffle + result) and the
+    // accumulation's checkpoint; count and extent come from the
+    // pointer checkpoint's statistics
+    val jobs = buildJobs("geo_flow_accum")
+    assert(jobs <= 3, s"$jobs jobs")
+  }
+
   test("knnJoin's broadcast arm builds with at most 1 job") {
     val probe = Derived.customerPoints(spark, dir)
       .select(col("id").as("probe_id"), col("x"), col("y"))

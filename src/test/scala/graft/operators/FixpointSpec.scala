@@ -84,6 +84,23 @@ class FixpointSpec extends AnyFunSuite {
       assertSameAccum(withMaxRows(0L)(flowAccum(g, t)), local, s"tile $t")
   }
 
+  test("flow accumulation: contraction == local Kahn away from the origin") {
+    // the tiles follow the extent read from the pointer checkpoint's
+    // statistics; here no tile edge lines up with the grid's. (The
+    // stencil drops cells at r < 0 or c < 0, so a grid with negative
+    // coordinates never reaches the accumulation.)
+    val g = holeyDem(61, 53, seed = 11)
+      .select((col("r") + 37).as("r"), (col("c") + 1003).as("c"), col("v"))
+    val ptr = Terrain.d8Pointer(g)
+    val (rs, cs) = (g.select("r").as[Long].collect(), g.select("c").as[Long].collect())
+    assert(graft.core.Checkpoint.range(ptr, "r") === Some((rs.min, rs.max)))
+    assert(graft.core.Checkpoint.range(ptr, "c") === Some((cs.min, cs.max)))
+    val local = withMaxRows(Long.MaxValue)(flowAccum(g))
+    assert(local.size === rs.length)
+    for (t <- Seq(2, 5, 16))
+      assertSameAccum(withMaxRows(0L)(flowAccum(g, t)), local, s"tile $t")
+  }
+
   test("flow accumulation: a mainstem across 10 tiles drains the grid") {
     val g = tilted(40)
     val dist = withMaxRows(0L)(flowAccum(g, 4))

@@ -70,6 +70,48 @@ class PipelineSpec extends AnyFunSuite {
     assert(Snapshots.readSnapshot(spark, root, "pages", 2L).count() === 200)
   }
 
+  /** Data files per part directory of a snapshot, with their
+    * modification times. */
+  private def partFiles(root: String, stage: String, id: Long) = {
+    import scala.jdk.CollectionConverters._
+    Files.list(Paths.get(root, stage, id.toString)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part="))
+      .map { d =>
+        d.getFileName.toString -> Files.list(d).iterator().asScala
+          .filter(f => !f.getFileName.toString.matches("^[._].*"))
+          .map(f => f.getFileName.toString -> Files.getLastModifiedTime(f))
+          .toMap
+      }.toMap
+  }
+
+  test("one file per part directory when one bucket value holds most rows") {
+    val root = Files.createTempDirectory("snap").toString
+    // 210 of 300 rows share one url, so one part holds most rows
+    val df = pages(300).withColumn("url",
+      when(col("url").rlike("[0-57]$"), lit("https://hot.example/"))
+        .otherwise(col("url")))
+    assert(df.where(col("url") === "https://hot.example/").count() === 210)
+    Snapshots.writeSnapshot(df, root, "pages", 4L, "url", 8)
+    val files = partFiles(root, "pages", 4L)
+    assert(files.nonEmpty)
+    files.foreach { case (dir, fs) => assert(fs.size === 1, dir) }
+    // resume: the parts whose manifest lines are gone (the hot part
+    // among them) are rewritten, one file each; the others keep theirs
+    val hotPart = Math.floorMod(spark.range(1)
+      .select(hash(lit("https://hot.example/"))).head().getInt(0), 8)
+    val redo = Set(hotPart, (hotPart + 3) % 8)
+    redo.foreach(k => Files.delete(
+      Paths.get(root, "pages", "4", "_manifest", s"part-$k.json")))
+    Files.delete(Paths.get(root, "pages", "4", "_manifest", "_SUCCESS.json"))
+    val metas = Snapshots.writeSnapshot(df, root, "pages", 4L, "url", 8)
+    assert(metas.map(_.part).toSet === redo)
+    val after = partFiles(root, "pages", 4L)
+    after.foreach { case (dir, fs) => assert(fs.size === 1, dir) }
+    files.filter { case (d, _) => !redo.exists(k => d == s"part=$k") }
+      .foreach { case (d, fs) => assert(after(d) === fs, d) }
+    assert(Snapshots.readSnapshot(spark, root, "pages", 4L).count() === 300)
+  }
+
   test("per-row invariant: byte-identical text per url through the pipeline") {
     val root = Files.createTempDirectory("snap").toString
     val df = pages(300).withColumn("text_sha", sha2(col("text"), 256))
