@@ -37,12 +37,6 @@ object Focal {
    */
   def contributions(grid: DataFrame, radius: Int, reflect: Boolean,
                     nRows: Long, nCols: Long): DataFrame = {
-    // the kernel offsets as a literal array exploded per cell: the
-    // same rows as a cross join with an offsets table, with no
-    // broadcast job
-    val offs = array((-radius to radius).flatMap(dy =>
-      (-radius to radius).map(dx => struct(lit(dy).as("dy"),
-        lit(dx).as("dx")))): _*)
     // ghost copies at virtual mirror coordinates (edge reflection)
     val virt =
       if (!reflect) grid.select(col("r").as("vr"), col("c").as("vc"),
@@ -56,12 +50,24 @@ object Focal {
           when(col("c") >= nCols - radius, lit(2 * nCols) - col("c") - 1))))
         .select(explode(col("vrs")).as("vr"), col("vcs"), col("v"))
         .select(col("vr"), explode(col("vcs")).as("vc"), col("v"))
-    virt.select(col("vr"), col("vc"), col("v"), inline(offs))
+    crossLiteral(virt, Seq("dy", "dx"),
+        (-radius to radius).flatMap(dy => (-radius to radius).map((dy, _))))
       .select((col("vr") - col("dy")).as("r"),
         (col("vc") - col("dx")).as("c"),
         col("dy"), col("dx"), col("v").as("nv"))
       .where(col("r") >= 0 && col("r") < nRows &&
         col("c") >= 0 && col("c") < nCols)
+  }
+
+  /** `df` crossed with the literal table `rows` (one tuple per row)
+    * whose columns are `names`: the rows of `df.crossJoin(rows.toDF(
+    * names: _*))`, made by exploding a literal array per row of `df`,
+    * so no job broadcasts the table. */
+  private[operators] def crossLiteral(df: DataFrame, names: Seq[String],
+                                      rows: Seq[Product]): DataFrame = {
+    def literal(row: Product) = struct(row.productIterator.toSeq.zip(names)
+      .map { case (v, n) => lit(v).as(n) }: _*)
+    df.select(col("*"), inline(array(rows.map(literal): _*)))
   }
 
   /** Center value column (null for targets whose own cell is NoData —

@@ -72,7 +72,7 @@ object Raster {
    * reference (Slope.java:223 isReflectedAtEdges = true), unresolved
    * reads take the centre value (NoData-substitution at :250).
    * Emitted in radians (atan of rise/run), gridRes = 1. One-shuffle
-   * stencil via the shared scatter gather.
+   * stencil via the shared block gather (Terrain.gatherNeighbors).
    */
   def hornSlope(grid: DataFrame, nRows: Long, nCols: Long): DataFrame = {
     val df = Terrain.gatherNeighbors(grid, reflect = true, nRows, nCols)
@@ -333,11 +333,11 @@ object Raster {
     // 2. cross-tile label adjacency: only boundary cells probe their
     //    8 neighbours; same-tile neighbours already share a label
     val off = (-1 to 1).flatMap(dr => (-1 to 1).map(dc => (dr, dc)))
-      .filterNot(o => o._1 == 0 && o._2 == 0).toDF("dr", "dc")
+      .filterNot(o => o._1 == 0 && o._2 == 0)
     val boundary = labeled.where(
       pmod(col("r"), lit(T)) === 0 || pmod(col("r"), lit(T)) === T - 1 ||
       pmod(col("c"), lit(T)) === 0 || pmod(col("c"), lit(T)) === T - 1)
-    val probes = boundary.crossJoin(broadcast(off))
+    val probes = Focal.crossLiteral(boundary, Seq("dr", "dc"), off)
       .select((col("r") + col("dr")).as("r"),
         (col("c") + col("dc")).as("c"), col("lbl").as("la"))
     val edges0 = probes.join(labeled, Seq("r", "c"))

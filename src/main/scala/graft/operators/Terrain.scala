@@ -64,16 +64,20 @@ object FlowForest {
     nodes.indices.iterator.map(i => nodes(i).copy(w = acc(i)))
   }
 
-  /** The perimeter forest of one tile of side `t`. An exit node (its
+  /** The perimeter forest of one tile: `nodes`, which lie in one tile
+    * of side `t` and one block of side `b` (the tile cut along block
+    * edges; `b` = `t` for a tile that is not cut). An exit node (its
     * link leaves the tile) keeps that link, weighted by its tile-local
     * accumulation. Any other border node links with weight 0 to the
     * exit its in-tile path reaches; it is dropped when that path ends
     * inside the tile, as inflow there never leaves. Interior nodes are
     * dropped: a cross-tile link joins D8 neighbours, so only border
     * nodes can receive one. */
-  def perimeter(tile: (Long, Long), nodes: Array[FlowNode],
-                t: Long): Iterator[FlowNode] = {
-    def leaves(f: FlowNode) = f.link && tileOf(f.tr, f.tc, t) != tile
+  def perimeter(nodes: Array[FlowNode], t: Long,
+                b: Long): Iterator[FlowNode] = {
+    def tile(r: Long, c: Long) = (tileOf(r, c, t), tileOf(r, c, b))
+    val home = tile(nodes(0).r, nodes(0).c)
+    def leaves(f: FlowNode) = f.link && tile(f.tr, f.tc) != home
     val (acc, next, order) = kahn(nodes, Map.empty)
     val exit = Array.fill(nodes.length)(-1)
     order.reverseIterator.foreach { i =>
@@ -81,12 +85,46 @@ object FlowForest {
                 else if (next(i) >= 0) exit(next(i)) else -1
     }
     nodes.indices.iterator
-      .filter(i => exit(i) >= 0 && onBorder(nodes(i), t))
+      .filter(i => exit(i) >= 0 &&
+        (onBorder(nodes(i), t) || onBorder(nodes(i), b)))
       .map { i =>
         val (f, e) = (nodes(i), nodes(exit(i)))
         if (exit(i) == i) f.copy(w = acc(i))
         else FlowNode(f.r, f.c, e.r, e.c, link = true, w = 0L)
       }
+  }
+
+  /** The perimeter forests of one block's tiles of side `t`, cut along
+    * the block's edges. */
+  def blockPerimeter(block: Seq[FlowNode], t: Long): Iterator[FlowNode] =
+    block.groupBy(f => tileOf(f.r, f.c, t)).valuesIterator
+      .flatMap(tile => perimeter(tile.toArray, t, Blocks.Side))
+
+  /** How many tiles of side `t`, cut along the edges of blocks of side
+    * `b`, span [lo, hi] along one axis: one, plus one per tile or block
+    * edge inside the span. */
+  def cutTiles(lo: Long, hi: Long, t: Long, b: Long): Long = {
+    def edges(s: Long) = Math.floorDiv(hi, s) - Math.floorDiv(lo, s)
+    1 + edges(t) + edges(b) - edges(t / BigInt(t).gcd(BigInt(b)).toLong * b)
+  }
+
+  /** The accumulation of every node of a forest in block layout, block
+    * by block: `seeds` (block row, block column, target r, target c,
+    * amount) are the inflows that cross into each block, also in block
+    * layout, placed over as many partitions. A seed for a block that
+    * has no nodes means the two inputs were not placed alike, and
+    * throws. */
+  def accumulateBlocks(nodes: Iterator[FlowNode],
+                       seeds: Iterator[(Long, Long, Long, Long, Long)])
+      : Iterator[FlowNode] = {
+    val in = Blocks.runs(seeds)(s => (s._1, s._2)).buffered
+    def stray() = new IllegalStateException(
+      s"inflow to block ${in.head._1}, which holds no node of this partition")
+    Blocks.runs(nodes)(f => Blocks.of(f.r, f.c)).flatMap { case (b, block) =>
+      if (in.hasNext && Ordering[(Long, Long)].lt(in.head._1, b)) throw stray()
+      val inflow = if (in.hasNext && in.head._1 == b) in.next()._2 else Nil
+      accumulate(block.toArray, inflow.iterator.map(s => (s._3, s._4, s._5)))
+    } ++ { if (in.hasNext) throw stray(); Iterator.empty }
   }
 }
 
@@ -247,28 +285,20 @@ object Terrain {
 
   /**
    * Gather the 8 neighbour values as n0..n7 (null when unresolved)
-   * plus the centre v — ONE scatter + ONE groupBy instead of eight
-   * sequential shuffle joins (8x less shuffle volume per stencil op).
-   * `reflect` mirrors out-of-grid reads at the edge like the
-   * reference's isReflectedAtEdges (WhiteboxRaster.java:535-557).
+   * plus the centre v, one row per cell with a value: one tile-and-halo
+   * pass over blocks of the grid ([[Blocks.gather]]), whose rows come
+   * out in block layout. `reflect` mirrors out-of-grid reads at the
+   * edge like the reference's isReflectedAtEdges
+   * (WhiteboxRaster.java:535-557).
    */
   private[operators] def gatherNeighbors(grid: DataFrame,
                                          reflect: Boolean = false,
                                          nRows: Long = Long.MaxValue / 4,
                                          nCols: Long = Long.MaxValue / 4)
-      : DataFrame = {
-    val pivots =
-      max(when(col("dy") === 0 && col("dx") === 0, col("nv"))).as("v") +:
-        (0 until 8).map(i =>
-          max(when(col("dy") === dY(i) && col("dx") === dX(i),
-            col("nv"))).as(s"n$i"))
-    Focal.contributions(grid, 1, reflect, nRows, nCols)
-      .groupBy("r", "c")
-      .agg(pivots.head, pivots.tail: _*)
-      .where(col("v").isNotNull)
-  }
+      : DataFrame =
+    Blocks.gather(grid, reflect, nRows, nCols)
 
-  /** Horn fx/fy finite differences from the pivoted stencil with the
+  /** Horn fx/fy finite differences from the gathered stencil with the
     * NoData->centre substitution shared by Slope/Aspect/Hillshade
     * (Aspect.java:245-257). gridRes = 1 so eightGridRes = 8. */
   private def fxFy(df: DataFrame): DataFrame = {
@@ -578,8 +608,15 @@ object Terrain {
    *  2. the perimeter forest is solved by the same recursion with
    *     tile side T^2. Tiles nest, and a link that crosses a T^2 tile
    *     is an original D8 link, so its ends lie on the T^2 border;
-   *  3. one cogroup pass reruns each tile's Kahn with the solved
-   *     cross-tile inflows as seeds, emitting every cell once.
+   *  3. one pass reruns Kahn with the solved cross-tile inflows as
+   *     seeds, emitting every cell once.
+   * The first level reads the pointer grid where it lies: the grid is
+   * in block layout ([[Blocks]], from [[gatherNeighbors]]), so its
+   * tiles are cut along block edges and stage 1 runs over each
+   * partition's blocks with no shuffle. Stage 3 of that level reruns
+   * each block's Kahn with the inflows that cross into it, placed in
+   * the same layout and zipped with the pointer grid partition by
+   * partition. Levels above it group their nodes by T^2 tile.
    * The base case is one task over the whole forest, taken when the
    * forest has at most [[localFixpointMaxRows]] nodes or fits in one
    * tile. Level k + 1 holds at most (4T - 4) nodes per level-k tile,
@@ -604,8 +641,9 @@ object Terrain {
                                      tileSize: Int): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    // the memoized pointer grid is a footed checkpoint: its row count
-    // and r/c extent are read from its statistics, with no job
+    // the memoized pointer grid is a footed checkpoint in block layout:
+    // its row count and r/c extent are read from its statistics, with
+    // no job
     val ptr = d8Pointer(grid)
     val cells = ptr.select(col("r").cast("long").as("r"),
         col("c").cast("long").as("c"),
@@ -616,8 +654,21 @@ object Terrain {
     val extent = (for (r <- Checkpoint.range(ptr, "r");
                        c <- Checkpoint.range(ptr, "c"))
       yield (r._1, r._2, c._1, c._2)).getOrElse((0L, 0L, 0L, 0L))
-    accumulateForest(cells, Checkpoint.rows(ptr), extent, tileSize.toLong)
-      .map(f => (f.r, f.c, f.w)).toDF("r", "c", "n_upslope")
+    val (rows, t) = (Checkpoint.rows(ptr), tileSize.toLong)
+    val acc =
+      if (oneTask(rows, extent, t)) accumulateForest(cells, rows, extent, t)
+      else contractBlocks(cells, rows, extent, t)
+    acc.map(f => (f.r, f.c, f.w)).toDF("r", "c", "n_upslope")
+  }
+
+  /** Whether [[accumulateForest]] takes its base case: the forest has
+    * at most `bound` nodes inside `extent` and fits one task. */
+  private def oneTask(bound: Long, extent: (Long, Long, Long, Long),
+                      t: Long): Boolean = {
+    val (minR, maxR, minC, maxC) = extent
+    bound <= localFixpointMaxRows ||
+      (Math.floorDiv(maxR, t) - Math.floorDiv(minR, t) + 1) *
+        (Math.floorDiv(maxC, t) - Math.floorDiv(minC, t) + 1) == 1
   }
 
   /** The accumulation of every node of the forest `nodes`, which has at
@@ -627,15 +678,15 @@ object Terrain {
                                extent: (Long, Long, Long, Long),
                                t: Long): Dataset[FlowNode] = {
     import nodes.sparkSession.implicits._
+    if (oneTask(bound, extent, t))
+      return nodes.coalesce(1).mapPartitions(it =>
+        FlowForest.accumulate(it.toArray, Iterator.empty))
     val (minR, maxR, minC, maxC) = extent
     val tiles = (Math.floorDiv(maxR, t) - Math.floorDiv(minR, t) + 1) *
       (Math.floorDiv(maxC, t) - Math.floorDiv(minC, t) + 1)
-    if (bound <= localFixpointMaxRows || tiles == 1)
-      return nodes.coalesce(1).mapPartitions(it =>
-        FlowForest.accumulate(it.toArray, Iterator.empty))
     val byTile = nodes.groupByKey(f => FlowForest.tileOf(f.r, f.c, t))
-    val perimeter = byTile.flatMapGroups((tile, it) =>
-      FlowForest.perimeter(tile, it.toArray, t))
+    val perimeter = byTile.flatMapGroups((_, it) =>
+      FlowForest.perimeter(it.toArray, t, t))
     val solved = accumulateForest(perimeter,
       math.min(bound, tiles * (4 * t - 4)), extent, Math.multiplyExact(t, t))
     val seeds = solved
@@ -645,6 +696,38 @@ object Terrain {
     byTile.cogroup(seeds.groupByKey(s => FlowForest.tileOf(s._1, s._2, t))) {
       (_, it, in) => FlowForest.accumulate(it.toArray, in)
     }
+  }
+
+  /** [[accumulateForest]]'s first level over the D8 forest `cells`,
+    * which is in block layout: tiles of side `t` cut along block edges,
+    * stage 1 over each partition's blocks, stage 3 per block with the
+    * inflows zipped in (see [[flowAccumD8]]). */
+  private def contractBlocks(cells: Dataset[FlowNode], rows: Long,
+                             extent: (Long, Long, Long, Long),
+                             t: Long): Dataset[FlowNode] = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    val (minR, maxR, minC, maxC) = extent
+    val tiles = FlowForest.cutTiles(minR, maxR, t, Blocks.Side) *
+      FlowForest.cutTiles(minC, maxC, t, Blocks.Side)
+    val perimeter = cells.mapPartitions(it =>
+      Blocks.runs(it)(f => Blocks.of(f.r, f.c))
+        .flatMap { case (_, block) => FlowForest.blockPerimeter(block, t) })
+    val solved = accumulateForest(perimeter,
+      math.min(rows, tiles * (4 * t - 4)), extent, Math.multiplyExact(t, t))
+    val nodes = cells.rdd
+    val inflow = Blocks.place(solved
+        .filter(f => f.link && Blocks.of(f.tr, f.tc) != Blocks.of(f.r, f.c))
+        .map { f =>
+          val (br, bc) = Blocks.of(f.tr, f.tc)
+          (br, bc, f.tr, f.tc, f.w)
+        }.toDF("br", "bc", "tr", "tc", "w"), nodes.getNumPartitions)
+      .as[(Long, Long, Long, Long, Long)].rdd
+    // a shuffle of no rows leaves no partitions to zip with
+    spark.createDataset(
+      if (inflow.getNumPartitions == 0)
+        nodes.mapPartitions(FlowForest.accumulateBlocks(_, Iterator.empty))
+      else nodes.zipPartitions(inflow)(FlowForest.accumulateBlocks))
   }
 
   /**
@@ -2748,11 +2831,9 @@ object Terrain {
     val sp = stream.join(ptr, Seq("r", "c")).where(col("ptr") > 0)
       .join(sid, Seq("r", "c"))
       .select(col("r"), col("c"), col("sid"), perDir(i => i, -1).as("cix"))
-    val dirs = (0 until 8).map(d =>
-      (d, dY(d), dX(d), 1 << ((d + 4) % 8)))
-      .toDF("d", "dy", "dx", "inflow")
+    val dirs = (0 until 8).map(d => (d, dY(d), dX(d), 1 << ((d + 4) % 8)))
     val g = grid.select(col("r"), col("c"))
-    val nb = sp.crossJoin(broadcast(dirs))
+    val nb = Focal.crossLiteral(sp, Seq("d", "dy", "dx", "inflow"), dirs)
       .select(col("r"), col("c"), col("sid"), col("cix"), col("d"),
         ((col("d") - col("cix") + 7) % 8).as("rp"),
         (col("r") + col("dy")).as("xr"), (col("c") + col("dx")).as("xc"),
@@ -3473,11 +3554,9 @@ object Terrain {
    * parallel at any scale.
    */
   def fillPits(grid: DataFrame): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
     val offs = (-1 to 1).flatMap(dr => (-1 to 1).map(dc => (dr, dc)))
-      .filterNot(o => o._1 == 0 && o._2 == 0).toDF("dr", "dc")
-    val nbrs = grid.crossJoin(broadcast(offs))
+      .filterNot(o => o._1 == 0 && o._2 == 0)
+    val nbrs = Focal.crossLiteral(grid, Seq("dr", "dc"), offs)
       .select((col("r") + col("dr")).as("r"),
         (col("c") + col("dc")).as("c"), col("v").as("nv"))
       .groupBy("r", "c").agg(min(col("nv")).as("lowest"))
@@ -3513,11 +3592,9 @@ object Terrain {
    * a window rank, keeping the operator fully relational.
    */
   def breachPits(grid: DataFrame): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
     val offs = (-1 to 1).flatMap(dr => (-1 to 1).map(dc => (dr, dc)))
-      .filterNot(o => o._1 == 0 && o._2 == 0).toDF("dr", "dc")
-    val agg = grid.crossJoin(broadcast(offs))
+      .filterNot(o => o._1 == 0 && o._2 == 0)
+    val agg = Focal.crossLiteral(grid, Seq("dr", "dc"), offs)
       .select((col("r") + col("dr")).as("r"),
         (col("c") + col("dc")).as("c"), col("v").as("nv"))
       .groupBy("r", "c")
@@ -3532,8 +3609,8 @@ object Terrain {
     val bCell = Seq(0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 0)
     val ring = (0 until 16).map(i =>
       (i, dX2(i), dY2(i), dX(bCell(i)), dY(bCell(i))))
-      .toDF("i", "dx2", "dy2", "bdx", "bdy")
-    val writes = pits.crossJoin(broadcast(ring))
+    val writes = Focal.crossLiteral(pits, Seq("i", "dx2", "dy2", "bdx", "bdy"),
+        ring)
       .select(col("pr"), col("pc"), col("pz"), col("i"),
         (col("pr") + col("dy2")).as("r2"), (col("pc") + col("dx2")).as("c2"),
         (col("pr") + col("bdy")).as("r"), (col("pc") + col("bdx")).as("c"))
@@ -3988,12 +4065,10 @@ object Terrain {
   def branchLength(grid: DataFrame, nRows: Long, nCols: Long): DataFrame = {
     val ptr = d8Pointer(grid)
     val reach = flowpathClosure(grid)
-    val spark = grid.sparkSession
-    import spark.implicits._
     // E, SE, S, SW (BranchLength.java's testByte c = 1..4), in-grid
-    val dirs = Seq((0, 1), (1, 1), (1, 0), (1, -1)).toDF("qdy", "qdx")
+    val dirs = Seq((0, 1), (1, 1), (1, 0), (1, -1))
     val cells = ptr.select(col("r"), col("c"))
-    val pairs = cells.crossJoin(broadcast(dirs))
+    val pairs = Focal.crossLiteral(cells, Seq("qdy", "qdx"), dirs)
       .select(col("r").as("pr"), col("c").as("pc"),
         (col("r") + col("qdy")).as("qr"), (col("c") + col("qdx")).as("qc"))
       .join(cells.select(col("r").as("qr"), col("c").as("qc")),
@@ -4033,13 +4108,10 @@ object Terrain {
    * pointer value, else 0. One stencil pass.
    */
   def findParallelFlow(grid: DataFrame): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
     val ptr = d8Pointer(grid)
     val offs = (0 until 8).map(i =>
       (dY(i), dX(i), 1L << i, 1L << ((i + 4) % 8)))
-      .toDF("dy", "dx", "outv", "inv")
-    ptr.crossJoin(broadcast(offs))
+    Focal.crossLiteral(ptr, Seq("dy", "dx", "outv", "inv"), offs)
       .join(ptr.select(col("r").as("nr"), col("c").as("nc"),
           col("ptr").as("nptr")),
         col("nr") === col("r") + col("dy") &&
@@ -4100,8 +4172,7 @@ object Terrain {
     val dd = Seq(1.0, math.sqrt(2.0), 1.0, math.sqrt(2.0), 1.0,
       math.sqrt(2.0), 1.0, math.sqrt(2.0))
     val offs = (0 until 8).map(i => (i, ydRef(i), xd(i), dd(i)))
-      .toDF("ci", "dy", "dx", "dd")
-    val cand = creek.crossJoin(broadcast(offs))
+    val cand = Focal.crossLiteral(creek, Seq("ci", "dy", "dx", "dd"), offs)
       .join(creek.select(col("r").as("nr"), col("c").as("nc"),
           col("v").as("nz")),
         col("nr") === col("r") + col("dy") &&
@@ -4199,11 +4270,9 @@ object Terrain {
    */
   def wallWatershed(grid: DataFrame, width: Long,
                     increment: Double): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
     val ws = watershed(grid, width).transform(Checkpoint(_))
-    val offs = (0 until 8).map(i => (dY(i), dX(i))).toDF("dy", "dx")
-    val same = ws.crossJoin(broadcast(offs))
+    val offs = (0 until 8).map(i => (dY(i), dX(i)))
+    val same = Focal.crossLiteral(ws, Seq("dy", "dx"), offs)
       .join(ws.select(col("r").as("nr"), col("c").as("nc"),
           col("sink_id").as("nw")),
         col("nr") === col("r") + col("dy") &&

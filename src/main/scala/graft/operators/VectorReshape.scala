@@ -206,12 +206,10 @@ object VectorReshape {
    */
   def smoothVertices(verts: DataFrame, halfFilter: Int,
                      closed: Boolean): DataFrame = {
-    val spark = verts.sparkSession
-    import spark.implicits._
-    val offs = (-halfFilter to halfFilter).toDF("o")
+    val offs = (-halfFilter to halfFilter).map(Tuple1(_))
     val sized = verts.join(
       verts.groupBy("gid").agg(count(lit(1)).as("n")), Seq("gid"))
-    val probes = sized.crossJoin(broadcast(offs))
+    val probes = Focal.crossLiteral(sized, Seq("o"), offs)
       .select(col("gid"), col("i"),
         (if (closed) pmod(col("i") + col("o"), col("n"))
          else col("i") + col("o")).as("j"))

@@ -42,11 +42,11 @@ object Vectorize {
       .flatMapGroups { (_, it) => localCcl4(it.toSeq, width) }
       .toDF("r", "c", "cls", "lbl")
       .transform(Checkpoint(_))
-    val off = Seq((-1, 0), (1, 0), (0, -1), (0, 1)).toDF("dr", "dc")
+    val off = Seq((-1, 0), (1, 0), (0, -1), (0, 1))
     val boundary = labeled.where(
       pmod(col("r"), lit(T)) === 0 || pmod(col("r"), lit(T)) === T - 1 ||
       pmod(col("c"), lit(T)) === 0 || pmod(col("c"), lit(T)) === T - 1)
-    val probes = boundary.crossJoin(broadcast(off))
+    val probes = Focal.crossLiteral(boundary, Seq("dr", "dc"), off)
       .select((col("r") + col("dr")).as("r"),
         (col("c") + col("dc")).as("c"), col("cls"),
         col("lbl").as("la"))

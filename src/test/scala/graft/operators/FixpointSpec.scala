@@ -127,6 +127,30 @@ class FixpointSpec extends AnyFunSuite {
     assert(jobs.head == jobs.last, s"jobs per grid side 40, 60: $jobs")
   }
 
+  test("flow accumulation: a 256^2 DEM takes 4 jobs, D8 pointer included") {
+    // ridges whose basins send flowpaths across many tiles and blocks,
+    // plus seeded noise that breaks slope ties
+    val side = 256
+    val dem = spark.range(side.toLong * side).map { k =>
+      val (r, c) = (k / side, k % side)
+      val (x, y) = (c.toDouble / side, r.toDouble / side)
+      var h = k * 6364136223846793005L + 1442695040888963407L
+      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
+      (r, c, 40.0 * math.sin(8 * math.Pi * x + 0.7) * math.cos(9 * math.Pi * y + 1.9) +
+        10.0 * (x + 0.5 * y) + (h >>> 11).toDouble / (1L << 53) * 0.05)
+    }.toDF("r", "c", "v").localCheckpoint(true)
+    var acc: DataFrame = null
+    // the pointer: neighbour shuffle and checkpoint; the accumulation:
+    // the shuffle of the inflows between blocks and the checkpoint
+    val jobs = withMaxRows(10000L)(JobCount(spark.sparkContext) {
+      Terrain.d8Pointer(dem)
+      acc = Terrain.flowAccumD8(dem)
+    })
+    assert(jobs === 4)
+    assertSameAccum(acc.collect().map(x => (x.getLong(0), x.getLong(1)) ->
+      x.getLong(2)).toMap, withMaxRows(Long.MaxValue)(flowAccum(dem)), "256^2")
+  }
+
   test("watershed: local chase == distributed doubling") {
     val g = hashGrid(20, 25)
     both(() => Terrain.watershed(g, 25).collect()

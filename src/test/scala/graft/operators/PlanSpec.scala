@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.graft.SqlStarts
+import org.apache.spark.sql.execution.SparkPlanInfo
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
@@ -83,5 +85,32 @@ class PlanSpec extends AnyFunSuite {
     val exchanges = "Exchange \\(".r.findAllIn(finalPlan).size
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges\n" +
       finalPlan.take(2000))
+  }
+
+  test("literal tables are exploded per row, never broadcast") {
+    // the queries that crossed an offsets or direction table with a
+    // broadcast join, each broadcast a job; the initial plans of every
+    // execution they start, their build-time checkpoints included. A
+    // cross join broadcasts its table whole (IdentityBroadcastMode);
+    // hash-join broadcasts are left out, as geo_smooth_vector's input
+    // zones are themselves a local table
+    def leaves(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+      if (p.children.isEmpty) Seq(p) else p.children.flatMap(leaves)
+    def localBroadcasts(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+      (if (p.nodeName == "BroadcastExchange" &&
+           p.simpleString.contains("IdentityBroadcastMode") &&
+           leaves(p).forall(_.nodeName == "LocalTableScan")) Seq(p)
+       else Nil) ++ p.children.flatMap(localBroadcasts)
+    val found = Seq("geo_branch_length", "geo_breach_pits", "geo_clump",
+        "geo_fill_pits", "geo_hillslopes", "geo_median_upstream",
+        "geo_parallel_flow", "geo_patch_metrics", "geo_r2v_polygons",
+        "geo_smooth_vector", "geo_wall_watershed").flatMap { name =>
+      val plans = SqlStarts(spark.sparkContext) {
+        SparkEntry.queries(name)(spark, dir).collect()
+      }
+      assert(plans.nonEmpty, name)
+      plans.flatMap(localBroadcasts).map(b => s"$name: ${b.simpleString}")
+    }
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }
