@@ -279,9 +279,7 @@ object Raster {
    */
   def contourCrossings(grid: DataFrame,
                        levels: Seq[Double]): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
-    val lv = levels.toDF("lvl")
+    val lv = levels.map(Tuple1(_))
     val right = grid.select(col("r"), (col("c") - 1).as("c"),
       col("v").as("v2"))
     val below = grid.select((col("r") - 1).as("r"), col("c"),
@@ -293,11 +291,11 @@ object Raster {
     // The raw double is bit-identical everywhere (sub/div are IEEE
     // correctly-rounded on identical inputs), so no rounding is the
     // deterministic contract.
-    val h = grid.join(right, Seq("r", "c")).crossJoin(broadcast(lv))
+    val h = Focal.crossLiteral(grid.join(right, Seq("r", "c")), Seq("lvl"), lv)
       .where((col("v") >= col("lvl")) =!= (col("v2") >= col("lvl")))
       .select(col("lvl"), lit("h").as("et"), col("r"), col("c"),
         ((col("lvl") - col("v")) / (col("v2") - col("v"))).as("t"))
-    val v = grid.join(below, Seq("r", "c")).crossJoin(broadcast(lv))
+    val v = Focal.crossLiteral(grid.join(below, Seq("r", "c")), Seq("lvl"), lv)
       .where((col("v") >= col("lvl")) =!= (col("v3") >= col("lvl")))
       .select(col("lvl"), lit("v").as("et"), col("r"), col("c"),
         ((col("lvl") - col("v")) / (col("v3") - col("v"))).as("t"))

@@ -5,15 +5,21 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Checkpoint
 
-/** A node of the weighted forest that [[Terrain.flowAccumD8]]
-  * accumulates: weight `w` at cell (r, c), linked downstream to
-  * (tr, tc) when `link` is set. A solved forest carries each node's
-  * accumulation in `w`. */
+/** A node of a forest that [[FlowForest]] accumulates: cell (r, c),
+  * linked downstream to (tr, tc) when `link` is set, over a link of
+  * length `d` (nano units); `w`, `m` and `s` are its own weight, path
+  * maximum and path sum. A solved forest carries in each node
+  *  - w: the sum of w over the node and everything upstream of it;
+  *  - m: the longest path that arrives at it, the max over its
+  *    in-links i of m(i) + d(i), and its own m;
+  *  - s: its own s plus, over its in-links i, s(i) + w(i) * d(i), the
+  *    summed length of every upstream node's path to it, weighted.
+  * Every field is a long sum or max, so the result does not depend on
+  * the order of operations. */
 case class FlowNode(r: Long, c: Long, tr: Long, tc: Long, link: Boolean,
-                    w: Long)
+                    w: Long, m: Long, s: Long, d: Long)
 
-/** Sequential kernels of the forest accumulation
-  * acc(n) = w(n) + sum of acc over n's in-links — the reference's
+/** Sequential kernels of the forest accumulation — the reference's
   * recursive walk (FlowAccumD8.java:330-375) as one Kahn topological
   * pass over a tile, or over a whole forest in one task. */
 object FlowForest {
@@ -27,19 +33,27 @@ object FlowForest {
   }
 
   /** Kahn accumulation over `nodes`, following only links whose target
-    * is one of `nodes`; `inflow` adds to a node's own weight. Returns
-    * the accumulations, each node's link-target index (-1 when none)
-    * and the visit order (upstream first). */
-  private def kahn(nodes: Array[FlowNode],
-                   inflow: scala.collection.Map[(Long, Long), Long])
-      : (Array[Long], Array[Int], Array[Int]) = {
+    * is one of `nodes`; each of `seeds`, a solved node outside the set,
+    * flows into its link target as a node of the set would. Returns the
+    * solved nodes, each node's link-target index (-1 when none) and the
+    * visit order (upstream first). A cycle leaves nodes unvisited, and
+    * throws. */
+  private def kahn(nodes: Array[FlowNode], seeds: Iterator[FlowNode])
+      : (Array[FlowNode], Array[Int], Array[Int]) = {
     val idx = scala.collection.mutable.HashMap.empty[(Long, Long), Int]
     nodes.indices.foreach(i => idx((nodes(i).r, nodes(i).c)) = i)
+    val (w, m, s) = (nodes.map(_.w), nodes.map(_.m), nodes.map(_.s))
+    def flow(t: Int, fw: Long, fm: Long, fs: Long, fd: Long): Unit = {
+      w(t) += fw
+      m(t) = math.max(m(t), fm + fd)
+      s(t) += fs + fw * fd
+    }
+    seeds.foreach(f =>
+      idx.get((f.tr, f.tc)).foreach(flow(_, f.w, f.m, f.s, f.d)))
     val next = nodes.map(f =>
       if (f.link) idx.getOrElse((f.tr, f.tc), -1) else -1)
     val indeg = new Array[Int](nodes.length)
     next.foreach(t => if (t >= 0) indeg(t) += 1)
-    val acc = nodes.map(f => f.w + inflow.getOrElse((f.r, f.c), 0L))
     val order = nodes.indices.filter(indeg(_) == 0).toBuffer // FIFO
     var head = 0
     while (head < order.length) {
@@ -47,50 +61,56 @@ object FlowForest {
       head += 1
       val t = next(i)
       if (t >= 0) {
-        acc(t) += acc(i)
+        flow(t, w(i), m(i), s(i), nodes(i).d)
         indeg(t) -= 1
         if (indeg(t) == 0) order += t
       }
     }
-    (acc, next, order.toArray)
+    require(order.length == nodes.length,
+      s"forest has a cycle: ${order.length} of ${nodes.length} nodes visited")
+    (Array.tabulate(nodes.length)(i => nodes(i).copy(w = w(i), m = m(i), s = s(i))),
+      next, order.toArray)
   }
 
-  /** Every node of `nodes`, once, with its accumulation; `seeds` are
-    * inflows (target r, target c, amount) from outside the set. */
+  /** Every node of `nodes`, once, solved; `seeds` are solved nodes
+    * outside the set whose links may end in it. */
   def accumulate(nodes: Array[FlowNode],
-                 seeds: Iterator[(Long, Long, Long)]): Iterator[FlowNode] = {
-    val inflow = seeds.toSeq.groupMapReduce(s => (s._1, s._2))(_._3)(_ + _)
-    val (acc, _, _) = kahn(nodes, inflow)
-    nodes.indices.iterator.map(i => nodes(i).copy(w = acc(i)))
-  }
+                 seeds: Iterator[FlowNode]): Iterator[FlowNode] =
+    kahn(nodes, seeds)._1.iterator
 
   /** The perimeter forest of one tile: `nodes`, which lie in one tile
     * of side `t` and one block of side `b` (the tile cut along block
     * edges; `b` = `t` for a tile that is not cut). An exit node (its
-    * link leaves the tile) keeps that link, weighted by its tile-local
-    * accumulation. Any other border node links with weight 0 to the
-    * exit its in-tile path reaches; it is dropped when that path ends
-    * inside the tile, as inflow there never leaves. Interior nodes are
-    * dropped: a cross-tile link joins D8 neighbours, so only border
-    * nodes can receive one. */
+    * link leaves the tile) keeps that link and its own `d`, solved
+    * tile-locally. Any other border node links to the exit its in-tile
+    * path reaches, with `d` the length of that path and w = s = 0 (m,
+    * a max, may keep its tile-local value); it is dropped when that
+    * path ends inside the tile, as inflow there never leaves. Interior
+    * nodes are dropped: a cross-tile link joins D8 neighbours, so only
+    * border nodes can receive one. */
   def perimeter(nodes: Array[FlowNode], t: Long,
                 b: Long): Iterator[FlowNode] = {
     def tile(r: Long, c: Long) = (tileOf(r, c, t), tileOf(r, c, b))
     val home = tile(nodes(0).r, nodes(0).c)
     def leaves(f: FlowNode) = f.link && tile(f.tr, f.tc) != home
-    val (acc, next, order) = kahn(nodes, Map.empty)
+    val (solved, next, order) = kahn(nodes, Iterator.empty)
     val exit = Array.fill(nodes.length)(-1)
+    val len = new Array[Long](nodes.length)
     order.reverseIterator.foreach { i =>
-      exit(i) = if (leaves(nodes(i))) i
-                else if (next(i) >= 0) exit(next(i)) else -1
+      if (leaves(nodes(i))) exit(i) = i
+      else if (next(i) >= 0 && exit(next(i)) >= 0) {
+        exit(i) = exit(next(i))
+        len(i) = nodes(i).d + len(next(i))
+      }
     }
     nodes.indices.iterator
       .filter(i => exit(i) >= 0 &&
         (onBorder(nodes(i), t) || onBorder(nodes(i), b)))
       .map { i =>
-        val (f, e) = (nodes(i), nodes(exit(i)))
-        if (exit(i) == i) f.copy(w = acc(i))
-        else FlowNode(f.r, f.c, e.r, e.c, link = true, w = 0L)
+        val e = nodes(exit(i))
+        if (exit(i) == i) solved(i)
+        else solved(i).copy(tr = e.r, tc = e.c, link = true, w = 0L,
+          s = 0L, d = len(i))
       }
   }
 
@@ -109,21 +129,19 @@ object FlowForest {
   }
 
   /** The accumulation of every node of a forest in block layout, block
-    * by block: `seeds` (block row, block column, target r, target c,
-    * amount) are the inflows that cross into each block, also in block
-    * layout, placed over as many partitions. A seed for a block that
-    * has no nodes means the two inputs were not placed alike, and
-    * throws. */
+    * by block: `seeds` are the solved nodes whose links cross into each
+    * block, in the layout of their link targets' blocks, placed over as
+    * many partitions. A seed for a block that has no nodes means the
+    * two inputs were not placed alike, and throws. */
   def accumulateBlocks(nodes: Iterator[FlowNode],
-                       seeds: Iterator[(Long, Long, Long, Long, Long)])
-      : Iterator[FlowNode] = {
-    val in = Blocks.runs(seeds)(s => (s._1, s._2)).buffered
+                       seeds: Iterator[FlowNode]): Iterator[FlowNode] = {
+    val in = Blocks.runs(seeds)(s => Blocks.of(s.tr, s.tc)).buffered
     def stray() = new IllegalStateException(
       s"inflow to block ${in.head._1}, which holds no node of this partition")
     Blocks.runs(nodes)(f => Blocks.of(f.r, f.c)).flatMap { case (b, block) =>
       if (in.hasNext && Ordering[(Long, Long)].lt(in.head._1, b)) throw stray()
       val inflow = if (in.hasNext && in.head._1 == b) in.next()._2 else Nil
-      accumulate(block.toArray, inflow.iterator.map(s => (s._3, s._4, s._5)))
+      accumulate(block.toArray, inflow.iterator)
     } ++ { if (in.hasNext) throw stray(); Iterator.empty }
   }
 }
@@ -598,13 +616,14 @@ object Terrain {
    *
    * Scale design — recursive perimeter-graph contraction (Barnes 2017,
    * "Parallel non-divergent flow accumulation for trillion cell
-   * digital elevation models"). The pointer grid is a forest with unit
-   * weights, and acc(n) = w(n) + sum of acc over n's in-links is
-   * solved in three stages over tiles of side T = `tileSize`:
+   * digital elevation models"). The pointer grid is a forest of
+   * [[FlowNode]]s with unit weights and step-length links, solved in
+   * three stages over tiles of side T = `tileSize`:
    *  1. one tile pass runs a local Kahn and emits each tile's
-   *     perimeter forest: exit cells keep their cross-tile link,
-   *     weighted by the tile-local accumulation; other border cells
-   *     link with weight 0 to the exit their in-tile path reaches;
+   *     perimeter forest: exit cells keep their cross-tile link and
+   *     their tile-local accumulation; other border cells link with
+   *     weight 0 to the exit their in-tile path reaches, over a link as
+   *     long as that path;
    *  2. the perimeter forest is solved by the same recursion with
    *     tile side T^2. Tiles nest, and a link that crosses a T^2 tile
    *     is an original D8 link, so its ends lie on the T^2 border;
@@ -626,17 +645,23 @@ object Terrain {
    * squaring of T until a tile covers the grid — and not on how many
    * tiles a flowpath crosses.
    */
-  def flowAccumD8(grid: DataFrame, tileSize: Int = 16): DataFrame = {
+  def flowAccumD8(grid: DataFrame, tileSize: Int = ForestTile): DataFrame =
+    d8Forest(grid, tileSize).select("r", "c", "n_upslope")
+
+  /** The solved D8 forest of `grid`, memoized: (r, c, n_upslope,
+    * max_len_nano, sum_len_nano), which [[flowAccumD8]] and
+    * [[upslopeFlowpathStats]] read. */
+  private def d8Forest(grid: DataFrame, tileSize: Int): DataFrame = {
     require(tileSize >= 2,
       s"flowAccumD8 needs tileSize >= 2 (tiles grow T -> T^2 per " +
         s"level), got $tileSize")
     graft.core.Memo.cached(
-      graft.core.Memo.key(grid, s"flowAccumD8:$tileSize"),
+      graft.core.Memo.key(grid, s"d8Forest:$tileSize"),
       grid.sparkSession) { flowAccumD8Impl(grid, tileSize) }
   }
 
-  /** [[flowAccumD8]] without the memo, so that tests can run both arms
-    * on one grid. */
+  /** [[d8Forest]] without the memo, so that tests can run both arms on
+    * one grid. */
   private[graft] def flowAccumD8Impl(grid: DataFrame,
                                      tileSize: Int): DataFrame = {
     val spark = grid.sparkSession
@@ -649,16 +674,38 @@ object Terrain {
         col("c").cast("long").as("c"),
         (col("r") + perDir(dY)).cast("long").as("tr"),
         (col("c") + perDir(dX)).cast("long").as("tc"),
-        (col("ptr") =!= 0).as("link"), lit(1L).as("w"))
+        (col("ptr") =!= 0).as("link"), lit(1L).as("w"), lit(0L).as("m"),
+        lit(0L).as("s"),
+        perDir(i => if (i % 2 == 0) DiagNano else 1000000000L)
+          .cast("long").as("d"))
       .as[FlowNode]
-    val extent = (for (r <- Checkpoint.range(ptr, "r");
-                       c <- Checkpoint.range(ptr, "c"))
-      yield (r._1, r._2, c._1, c._2)).getOrElse((0L, 0L, 0L, 0L))
-    val (rows, t) = (Checkpoint.rows(ptr), tileSize.toLong)
+    val (rows, extent, t) = (Checkpoint.rows(ptr), extentOf(ptr), tileSize.toLong)
     val acc =
       if (oneTask(rows, extent, t)) accumulateForest(cells, rows, extent, t)
       else contractBlocks(cells, rows, extent, t)
-    acc.map(f => (f.r, f.c, f.w)).toDF("r", "c", "n_upslope")
+    acc.map(f => (f.r, f.c, f.w, f.m, f.s))
+      .toDF("r", "c", "n_upslope", "max_len_nano", "sum_len_nano")
+  }
+
+  /** Tile side of the forest contraction. */
+  private val ForestTile = 16
+
+  /** (min r, max r, min c, max c) of the footed checkpoint `cp`, read
+    * without a job; zeros when it is empty. */
+  private def extentOf(cp: Dataset[_]): (Long, Long, Long, Long) =
+    (for (r <- Checkpoint.range(cp, "r"); c <- Checkpoint.range(cp, "c"))
+      yield (r._1, r._2, c._1, c._2)).getOrElse((0L, 0L, 0L, 0L))
+
+  /** The solved forest of `nodes`, a frame of [[FlowNode]]'s columns
+    * whose links join D8 neighbours, one node per cell of the footed
+    * checkpoint `cells`: [[accumulateForest]] with tiles of side
+    * [[ForestTile]], bounded by the row count and extent of `cells`,
+    * read with no job. */
+  private def solveForest(nodes: DataFrame,
+                          cells: DataFrame): Dataset[FlowNode] = {
+    import nodes.sparkSession.implicits._
+    accumulateForest(nodes.as[FlowNode], Checkpoint.rows(cells),
+      extentOf(cells), ForestTile)
   }
 
   /** Whether [[accumulateForest]] takes its base case: the forest has
@@ -689,11 +736,9 @@ object Terrain {
       FlowForest.perimeter(it.toArray, t, t))
     val solved = accumulateForest(perimeter,
       math.min(bound, tiles * (4 * t - 4)), extent, Math.multiplyExact(t, t))
-    val seeds = solved
-      .filter(f => f.link &&
-        FlowForest.tileOf(f.tr, f.tc, t) != FlowForest.tileOf(f.r, f.c, t))
-      .map(f => (f.tr, f.tc, f.w))
-    byTile.cogroup(seeds.groupByKey(s => FlowForest.tileOf(s._1, s._2, t))) {
+    val seeds = solved.filter(f => f.link &&
+      FlowForest.tileOf(f.tr, f.tc, t) != FlowForest.tileOf(f.r, f.c, t))
+    byTile.cogroup(seeds.groupByKey(s => FlowForest.tileOf(s.tr, s.tc, t))) {
       (_, it, in) => FlowForest.accumulate(it.toArray, in)
     }
   }
@@ -720,9 +765,9 @@ object Terrain {
         .filter(f => f.link && Blocks.of(f.tr, f.tc) != Blocks.of(f.r, f.c))
         .map { f =>
           val (br, bc) = Blocks.of(f.tr, f.tc)
-          (br, bc, f.tr, f.tc, f.w)
-        }.toDF("br", "bc", "tr", "tc", "w"), nodes.getNumPartitions)
-      .as[(Long, Long, Long, Long, Long)].rdd
+          (br, bc, f)
+        }.toDF("br", "bc", "f"), nodes.getNumPartitions)
+      .select("f.*").as[FlowNode].rdd
     // a shuffle of no rows leaves no partitions to zip with
     spark.createDataset(
       if (inflow.getNumPartitions == 0)
@@ -2085,80 +2130,25 @@ object Terrain {
    * summed length of every upstream channel segment, and the longest
    * along-stream distance from any channel head. Lengths are exact
    * nano-integers ([[DiagNano]]) so sum/max are order-independent
-   * across engines. Jacobi rounds over the stream-to-stream D8 edges
-   * (one-task Kahn fast path below [[localFixpointMaxRows]], like
-   * [[upslopeFlowpathStats]]); rounds bound the propagated chain
-   * length in the distributed arm.
+   * across engines. The stream cells are a forest linked along the
+   * stream-to-stream D8 edges, solved by the forest contraction of
+   * [[flowAccumD8]]: each cell weighs its own out-edge length d, so its
+   * solved weight less d is the upstream total and its path maximum
+   * the head distance.
    */
-  def upstreamChannelStats(grid: DataFrame, threshold: Long,
-                           rounds: Int = 64): DataFrame = {
+  def upstreamChannelStats(grid: DataFrame, threshold: Long): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val (stream, sedges0, _) = streamGraph(grid, threshold)
-    val dNano = when(
-      abs(col("tr") - col("r")) + abs(col("tc") - col("c")) === 2,
-      lit(DiagNano)).otherwise(lit(1000000000L))
-    val edges = sedges0
-      .select(col("r"), col("c"), col("tr"), col("tc"), dNano.as("d"))
-      .transform(Checkpoint(_))
-    if (Checkpoint.rows(stream) <= localFixpointMaxRows) {
-      val tagged = stream
-        .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-          lit(-1L).as("d"))
-        .unionByName(edges)
-        .as[(Long, Long, Long, Long, Long)]
-      return tagged.coalesce(1).mapPartitions { it =>
-        val rows = it.toArray
-        val cells = rows.filter(_._5 == -1L).map(t => (t._1, t._2))
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-        val n = cells.length
-        val out = Array.fill(n)(-1)
-        val dist = Array.ofDim[Long](n)
-        val indeg = Array.ofDim[Int](n)
-        rows.foreach {
-          case (r, c, tr, tc, d) if d >= 0L =>
-            val s = idx((r, c)); val t = idx((tr, tc))
-            out(s) = t; dist(s) = d; indeg(t) += 1
-          case _ =>
-        }
-        val tot = Array.ofDim[Long](n)
-        val hd = Array.ofDim[Long](n)
-        val stack = scala.collection.mutable.Stack[Int]()
-        (0 until n).foreach(i => if (indeg(i) == 0) stack.push(i))
-        var seen = 0
-        while (stack.nonEmpty) {
-          val i = stack.pop(); seen += 1
-          val t = out(i)
-          if (t >= 0) {
-            tot(t) += tot(i) + dist(i)
-            val cand = hd(i) + dist(i)
-            if (cand > hd(t)) hd(t) = cand
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.push(t)
-          }
-        }
-        require(seen == n, s"stream graph has a cycle ($seen of $n)")
-        cells.indices.iterator.map(i =>
-          (cells(i)._1, cells(i)._2, tot(i), hd(i)))
-      }.toDF("r", "c", "total_upstream_nano", "head_dist_nano")
-    }
-    var acc = stream.withColumn("tot", lit(0L)).withColumn("hd", lit(0L))
-    for (i <- 1 to rounds) {
-      val contrib = edges
-        .join(acc.select(col("r"), col("c"), col("tot").as("__t"),
-          col("hd").as("__h")), Seq("r", "c"))
-        .groupBy(col("tr").as("r"), col("tc").as("c"))
-        .agg(sum(col("__t") + col("d")).as("it"),
-          max(col("__h") + col("d")).as("ih"))
-      acc = stream.join(contrib, Seq("r", "c"), "left")
-        .select(col("r"), col("c"),
-          coalesce(col("it"), lit(0L)).as("tot"),
-          coalesce(col("ih"), lit(0L)).as("hd"))
-      if (i % 2 == 0 && i < rounds) acc = Checkpoint(acc)
-    }
-    acc.select(col("r"), col("c"), col("tot").as("total_upstream_nano"),
-      col("hd").as("head_dist_nano"))
+    val (stream, sedges, _) = streamGraph(grid, threshold)
+    val d = when(col("tr").isNull, lit(0L)).otherwise(stepNano)
+    solveForest(stream.join(sedges, Seq("r", "c"), "left")
+        .select(col("r").cast("long").as("r"), col("c").cast("long").as("c"),
+          coalesce(col("tr"), lit(0L)).cast("long").as("tr"),
+          coalesce(col("tc"), lit(0L)).cast("long").as("tc"),
+          col("tr").isNotNull.as("link"), d.as("w"), lit(0L).as("m"),
+          lit(0L).as("s"), d.as("d")), stream)
+      .map(f => (f.r, f.c, f.w - f.d, f.m))
+      .toDF("r", "c", "total_upstream_nano", "head_dist_nano")
   }
 
   /**
@@ -3118,88 +3108,14 @@ object Terrain {
    * (max_len_nano; 0 with no inflow), the contributing-cell count
    * (n_paths, self included = D8 flow accumulation), and the total
    * arriving length (sum_len_nano). Exact nano-BIGINT lengths make
-   * every aggregate order-independent. Jacobi rounds over the
-   * reversed D8 DAG (rounds >= longest flowpath for the exact
-   * fixpoint); grids under [[localFixpointMaxRows]] run one
-   * in-memory topological pass in a single task.
+   * every aggregate order-independent. The fields are those of the
+   * solved D8 forest that [[flowAccumD8]] memoizes, so both read one
+   * contraction.
    */
-  def upslopeFlowpathStats(grid: DataFrame,
-                           rounds: Int = 64): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
-    val dNano = when(
-      abs(col("tr") - col("r")) + abs(col("tc") - col("c")) === 2,
-      lit(DiagNano)).otherwise(lit(1000000000L))
-    val edges = d8Edges(grid)
-      .select(col("r"), col("c"), col("tr"), col("tc"),
-        dNano.as("d"))
-      .transform(Checkpoint(_))
-    val base = grid.select(col("r"), col("c")).transform(Checkpoint(_))
-    if (Checkpoint.rows(base) <= localFixpointMaxRows) {
-      // one-task exact pass: Kahn order over the D8 DAG
-      val tagged = base
-        .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-          lit(-1L).as("d"))
-        .unionByName(edges)
-        .as[(Long, Long, Long, Long, Long)]
-      return tagged.coalesce(1).mapPartitions { it =>
-        val rows = it.toArray
-        val cells = rows.filter(_._5 == -1L).map(t => (t._1, t._2))
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-        val n = cells.length
-        val out = Array.fill(n)(-1)   // successor index
-        val dist = Array.ofDim[Long](n)
-        val indeg = Array.ofDim[Int](n)
-        rows.foreach {
-          case (r, c, tr, tc, d) if d >= 0L =>
-            val s = idx((r, c)); val t = idx((tr, tc))
-            out(s) = t; dist(s) = d; indeg(t) += 1
-          case _ =>
-        }
-        val mx = Array.ofDim[Long](n)
-        val cnt = Array.fill(n)(1L)
-        val sm = Array.ofDim[Long](n)
-        val stack = scala.collection.mutable.Stack[Int]()
-        (0 until n).foreach(i => if (indeg(i) == 0) stack.push(i))
-        var seen = 0
-        while (stack.nonEmpty) {
-          val i = stack.pop(); seen += 1
-          val t = out(i)
-          if (t >= 0) {
-            val cand = mx(i) + dist(i)
-            if (cand > mx(t)) mx(t) = cand
-            cnt(t) += cnt(i)
-            sm(t) += sm(i) + cnt(i) * dist(i)
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.push(t)
-          }
-        }
-        require(seen == n, s"D8 graph has a cycle ($seen of $n)")
-        cells.indices.iterator.map(i =>
-          (cells(i)._1, cells(i)._2, mx(i), cnt(i), sm(i)))
-      }.toDF("r", "c", "max_len_nano", "n_paths", "sum_len_nano")
-    }
-    var acc = base.withColumn("mx", lit(0L))
-      .withColumn("cnt", lit(1L)).withColumn("sm", lit(0L))
-    for (i <- 1 to rounds) {
-      val contrib = edges
-        .join(acc.select(col("r"), col("c"), col("mx").as("__m"),
-          col("cnt").as("__n"), col("sm").as("__s")), Seq("r", "c"))
-        .groupBy(col("tr").as("r"), col("tc").as("c"))
-        .agg(max(col("__m") + col("d")).as("im"),
-          sum(col("__n")).as("in"),
-          sum(col("__s") + col("__n") * col("d")).as("is"))
-      acc = base.join(contrib, Seq("r", "c"), "left")
-        .select(col("r"), col("c"),
-          coalesce(col("im"), lit(0L)).as("mx"),
-          (lit(1L) + coalesce(col("in"), lit(0L))).as("cnt"),
-          coalesce(col("is"), lit(0L)).as("sm"))
-      if (i % 2 == 0 && i < rounds) acc = Checkpoint(acc)
-    }
-    acc.select(col("r"), col("c"), col("mx").as("max_len_nano"),
-      col("cnt").as("n_paths"), col("sm").as("sum_len_nano"))
-  }
+  def upslopeFlowpathStats(grid: DataFrame): DataFrame =
+    d8Forest(grid, ForestTile).select(col("r"), col("c"),
+      col("max_len_nano"), col("n_upslope").as("n_paths"),
+      col("sum_len_nano"))
 
   /**
    * FillDepressions (HydroTools/FillDepressions.java, Wang & Liu
@@ -3327,12 +3243,11 @@ object Terrain {
    * pure function of the oracle-checked acc6 surface, so both
    * engines derive the identical pointer. Costs >= 1 make acc6
    * strictly decrease along the backlink (cycle-free). Path counts
-   * propagate by Jacobi rounds over the backlink DAG; grids under
-   * [[localFixpointMaxRows]] run one in-memory Kahn pass.
+   * are the weights of the backlink forest, each destination weighing
+   * 1, solved by the forest contraction of [[flowAccumD8]].
    */
   def costPathway(cost: DataFrame, sources: DataFrame, dests: DataFrame,
-                  nRows: Long, nCols: Long,
-                  rounds: Int = 256): DataFrame = {
+                  nRows: Long, nCols: Long): DataFrame = {
     val spark = cost.sparkSession
     import spark.implicits._
     val acc6 = costAccumulation(cost, sources, nRows, nCols)
@@ -3360,66 +3275,18 @@ object Terrain {
         struct(col("vl"), col("i"))).as("p"))
       .select(col("r"), col("c"), col("p.nr").as("tr"),
         col("p.nc").as("tc"))
-      .transform(Checkpoint(_))
-    val base = acc6.select(col("r"), col("c"))
-      .join(dests.select(col("r"), col("c"), lit(1L).as("__d")),
-        Seq("r", "c"), "left")
-      .select(col("r"), col("c"), coalesce(col("__d"), lit(0L)).as("load"))
-      .transform(Checkpoint(_))
-    if (Checkpoint.rows(base) <= localFixpointMaxRows) {
-      val tagged = base
-        .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-          col("load"), lit(true).as("isCell"))
-        .unionByName(bl.select(col("r"), col("c"), col("tr"), col("tc"),
-          lit(0L).as("load"), lit(false).as("isCell")))
-        .as[(Long, Long, Long, Long, Long, Boolean)]
-      return tagged.coalesce(1).mapPartitions { it =>
-        val rows = it.toArray
-        val cells = rows.filter(_._6).map(t => (t._1, t._2, t._5))
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        cells.zipWithIndex.foreach { case (k, i) => idx((k._1, k._2)) = i }
-        val n = cells.length
-        val out = Array.fill(n)(-1)
-        val indeg = Array.ofDim[Int](n)
-        rows.foreach {
-          case (r, c, tr, tc, _, false) =>
-            val s = idx((r, c)); val t = idx((tr, tc))
-            out(s) = t; indeg(t) += 1
-          case _ =>
-        }
-        val cnt = cells.map(_._3)
-        val stack = scala.collection.mutable.Stack[Int]()
-        (0 until n).foreach(i => if (indeg(i) == 0) stack.push(i))
-        var seen = 0
-        while (stack.nonEmpty) {
-          val i = stack.pop(); seen += 1
-          val t = out(i)
-          if (t >= 0) {
-            cnt(t) += cnt(i)
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.push(t)
-          }
-        }
-        require(seen == n, s"backlink graph has a cycle ($seen of $n)")
-        cells.indices.iterator
-          .filter(cnt(_) > 0L)
-          .map(i => (cells(i)._1, cells(i)._2, cnt(i)))
-      }.toDF("r", "c", "n_paths")
-    }
-    var acc = base.withColumnRenamed("load", "cnt")
-    for (i <- 1 to rounds) {
-      val contrib = bl
-        .join(acc.select(col("r"), col("c"), col("cnt").as("__n")),
-          Seq("r", "c"))
-        .groupBy(col("tr").as("r"), col("tc").as("c"))
-        .agg(sum(col("__n")).as("in"))
-      acc = base.join(contrib, Seq("r", "c"), "left")
-        .select(col("r"), col("c"),
-          (col("load") + coalesce(col("in"), lit(0L))).as("cnt"))
-      if (i % 2 == 0 && i < rounds) acc = Checkpoint(acc)
-    }
-    acc.where(col("cnt") > 0)
-      .select(col("r"), col("c"), col("cnt").as("n_paths"))
+    solveForest(acc6.select(col("r"), col("c"))
+        .join(dests.select(col("r"), col("c"), lit(1L).as("__d")),
+          Seq("r", "c"), "left")
+        .join(bl, Seq("r", "c"), "left")
+        .select(col("r").cast("long").as("r"), col("c").cast("long").as("c"),
+          coalesce(col("tr"), lit(0L)).cast("long").as("tr"),
+          coalesce(col("tc"), lit(0L)).cast("long").as("tc"),
+          col("tr").isNotNull.as("link"),
+          coalesce(col("__d"), lit(0L)).as("w"), lit(0L).as("m"),
+          lit(0L).as("s"), lit(0L).as("d")), acc6)
+      .filter(_.w > 0L)
+      .map(f => (f.r, f.c, f.w)).toDF("r", "c", "n_paths")
   }
 
   /**
@@ -3963,8 +3830,9 @@ object Terrain {
    * within `snapDist` cells; the reference's col-ascending-then-row-
    * ascending scan with a strict `<` keeps the FIRST minimum, i.e.
    * ties break by (dist2, col, row) — unlike [[snapPourPoints]]'
-   * max-accumulation semantics. Executed as a bounded stencil join
-   * (outlets x (2k+1)^2 offsets), map-side at any scale.
+   * max-accumulation semantics. Executed as a bounded stencil join:
+   * each outlet explodes its (2k+1)^2 offsets row by row, so the plan
+   * has the same size for any k, and no table is broadcast.
    */
   def jensonSnapPourPoints(grid: DataFrame, outlets: DataFrame,
                            threshold: Long, snapDist: Int): DataFrame = {
@@ -3972,10 +3840,10 @@ object Terrain {
     import spark.implicits._
     val stream = extractStreams(grid, threshold)
       .select(col("r").as("sr"), col("c").as("sc"))
-    val offs = (-snapDist to snapDist)
-      .flatMap(dc => (-snapDist to snapDist).map(dr => (dr, dc)))
-      .toDF("dr", "dc")
-    val cand = outlets.crossJoin(broadcast(offs))
+    val offset = explode(sequence(lit(-snapDist), lit(snapDist)))
+    val cand = outlets
+      .select(col("outlet_id"), col("r"), col("c"), offset.as("dr"))
+      .select(col("*"), offset.as("dc"))
       .select(col("outlet_id"), col("r"), col("c"),
         (col("r") + col("dr")).as("sr"), (col("c") + col("dc")).as("sc"))
       .join(stream, Seq("sr", "sc"))

@@ -41,6 +41,19 @@ class FixpointSpec extends AnyFunSuite {
     Terrain.flowAccumD8Impl(g, tileSize).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
 
+  /** Upslope flowpath stats by cell: (max_len_nano, n_paths,
+    * sum_len_nano). */
+  private def upslopeStats(g: DataFrame) =
+    Terrain.upslopeFlowpathStats(g).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) ->
+        (x.getLong(2), x.getLong(3), x.getLong(4))).toMap
+
+  private def costPaths(cost: DataFrame, sources: DataFrame,
+                        dests: DataFrame, nR: Long, nC: Long) =
+    Terrain.costPathway(cost, sources.select("r", "c"),
+      dests.select("r", "c"), nR, nC).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
+
   private def assertSameAccum(got: Map[(Long, Long), Long],
                               want: Map[(Long, Long), Long],
                               what: String): Unit = {
@@ -169,11 +182,95 @@ class FixpointSpec extends AnyFunSuite {
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap)
   }
 
-  test("upstream channel stats: local Kahn == distributed Jacobi") {
+  test("upstream channel stats: one task == forest contraction") {
     val g = hashGrid(20, 25)
     both(() => Terrain.upstreamChannelStats(g, 5).collect()
       .map(x => (x.getLong(0), x.getLong(1)) ->
         (x.getLong(2), x.getLong(3))).toMap)
+  }
+
+  test("upslope flowpath stats: one task == forest contraction") {
+    // each arm reads a fresh checkpoint of the grid, so the memoized
+    // D8 forest of one arm cannot serve the other
+    val g = hashGrid(20, 25)
+    both(() => upslopeStats(g.localCheckpoint()))
+  }
+
+  test("upslope flowpath stats: a 79-step mainstem, one task == contraction") {
+    val g = tilted(80)
+    val local = withMaxRows(Long.MaxValue)(upslopeStats(g.localCheckpoint()))
+    // (0, 0) drains all 6 400 cells; its longest arriving path is the
+    // diagonal mainstem from (79, 79), and cell (r, c) reaches it in
+    // min(r, c) diagonal and |r - c| straight steps
+    val sumLen = (for (r <- 0L until 80L; c <- 0L until 80L)
+      yield math.min(r, c) * Terrain.DiagNano + math.abs(r - c) * 1000000000L).sum
+    assert(local((0L, 0L)) == ((79L * Terrain.DiagNano, 6400L, sumLen)))
+    assert(local.map { case (k, v) => k -> v._2 } == flowAccum(g))
+    both(() => upslopeStats(g.localCheckpoint()))
+  }
+
+  test("upstream channel stats: a 79-step mainstem, one task == contraction") {
+    val g = tilted(80)
+    both(() => Terrain.upstreamChannelStats(g, 3).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) ->
+        (x.getLong(2), x.getLong(3))).toMap)
+  }
+
+  test("cost pathway: one task == forest contraction") {
+    val g = hashGrid(20, 25)
+    val cost = g.select(col("r"), col("c"), (col("v") / 100.0 + 1.0).as("v"))
+    both(() => costPaths(cost, g.where(col("v") >= 97.0),
+      g.where(col("v") <= 3.0), 20, 25))
+  }
+
+  test("cost pathway: a 299-step backlink path, one task == contraction") {
+    // a 1 x 300 strip of unit cost: the one destination's path back to
+    // the source at the other end visits every cell once
+    val strip = (0L until 300L).map(c => (0L, c, 1.0)).toDF("r", "c", "v")
+    def run() = costPaths(strip, strip.where(col("c") === 0),
+      strip.where(col("c") === 299), 1, 300)
+    assert(withMaxRows(Long.MaxValue)(run()) ==
+      (0L until 300L).map(c => (0L, c) -> 1L).toMap)
+    both(() => run())
+  }
+
+  test("forest accumulation: a cycle throws") {
+    val two = Array(FlowNode(0, 0, 0, 1, link = true, 1, 0, 0, 1),
+      FlowNode(0, 1, 0, 0, link = true, 1, 0, 0, 1))
+    val e = intercept[IllegalArgumentException](
+      FlowForest.accumulate(two, Iterator.empty))
+    assert(e.getMessage.contains("cycle"), e.getMessage)
+  }
+
+  test("gate grid: 24 rounds reach the fixpoint of every round-capped accumulation") {
+    // the gate's queries stop their Jacobi accumulations at 24 rounds,
+    // as their SQL oracles do; on the gate's 40 x 50 grid that is the
+    // fixpoint once rounded to the queries' 6 decimals, so the gate
+    // checks the accumulation and not a truncation
+    val g = Derived.partGrid(spark, "/root/testdata/sf0.01")
+    val mass = g.withColumn("load", col("v"))
+      .withColumn("eff", lit(0.8) + (col("r") % 3).cast("double") * lit(0.05))
+      .withColumn("absorp", (col("c") % 4).cast("double") * lit(0.01))
+    def acc(df: DataFrame) = df.select(col("r"), col("c"),
+        round(col("acc"), 6).as("acc")).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap
+    val ops: Seq[(String, Int => Map[(Long, Long), Any])] = Seq(
+      "dinfAccum" -> (n => acc(Terrain.dinfAccum(g, rounds = n))),
+      "fd8Accum" -> (n => acc(Terrain.fd8Accum(g, 1.0, rounds = n))),
+      "mdinfAccum" -> (n => acc(Terrain.mdinfAccum(g, 1.0, rounds = n))),
+      "massFluxD8" -> (n => acc(Terrain.massFluxD8(mass, rounds = n))),
+      "massFluxDinf" -> (n => acc(Terrain.massFluxDinf(mass, rounds = n))),
+      "streamHeadsMdinf" -> (n =>
+        Terrain.streamHeadsMdinf(g, caThr = 5.0, rounds = n).collect()
+          .map(x => (x.getLong(0), x.getLong(1)) -> x.getInt(2)).toMap))
+    for ((name, run) <- ops) {
+      val (gate, fixpoint) = (run(24), run(2000))
+      assert(gate.nonEmpty, name)
+      val bad = (gate.keySet ++ fixpoint.keySet)
+        .filter(k => gate.get(k) != fixpoint.get(k))
+      assert(bad.isEmpty, s"$name: ${bad.size} cells move after 24 rounds, " +
+        s"e.g. ${bad.take(3).map(k => s"$k ${gate.get(k)} -> ${fixpoint.get(k)}")}")
+    }
   }
 
   test("downslope index: local walk == distributed stepping") {

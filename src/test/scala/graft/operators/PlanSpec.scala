@@ -104,7 +104,8 @@ class PlanSpec extends AnyFunSuite {
     val found = Seq("geo_branch_length", "geo_breach_pits", "geo_clump",
         "geo_fill_pits", "geo_hillslopes", "geo_median_upstream",
         "geo_parallel_flow", "geo_patch_metrics", "geo_r2v_polygons",
-        "geo_smooth_vector", "geo_wall_watershed").flatMap { name =>
+        "geo_smooth_vector", "geo_wall_watershed", "geo_contour",
+        "geo_contour_lines", "geo_jenson_snap").flatMap { name =>
       val plans = SqlStarts(spark.sparkContext) {
         SparkEntry.queries(name)(spark, dir).collect()
       }
@@ -112,5 +113,22 @@ class PlanSpec extends AnyFunSuite {
       plans.flatMap(localBroadcasts).map(b => s"$name: ${b.simpleString}")
     }
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no query plans a cartesian product, and every query plans") {
+    // every query's physical plan, built without running the query
+    // (build-time checkpoints do run): a BroadcastNestedLoopJoin or a
+    // SortMergeJoin may be right for its inputs, a CartesianProduct is
+    // not
+    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
+      try {
+        val plan = q(spark, dir).queryExecution.sparkPlan.toString
+        if (plan.contains("CartesianProduct")) Some(s"$name: CartesianProduct")
+        else None
+      } catch {
+        case e: Exception => Some(s"$name: does not plan: $e")
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 }
