@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.InJobExchange
 import org.apache.spark.sql.types._
 
 /**
@@ -19,6 +22,11 @@ import org.apache.spark.sql.types._
  * zipped. [[Terrain.gatherNeighbors]] emits its rows in this layout,
  * and so does the D8 pointer grid built on it, which
  * [[Terrain.flowAccumD8]] reads block by block.
+ *
+ * Every block shuffle here is an [[InJobExchange]]: its map side runs
+ * as a stage of the job that consumes it. A `Dataset.repartition`
+ * would be an `Exchange`, which adaptive execution runs as a job of
+ * its own, with a driver round trip to re-plan after it.
  */
 private[graft] object Blocks {
 
@@ -41,9 +49,16 @@ private[graft] object Blocks {
   }
 
   /** `df`, with long columns br and bc, in block layout over `n`
-    * partitions. */
+    * partitions: hash-partitioned on (br, bc) as `repartition(n, br,
+    * bc)` does it, then sorted by (br, bc) within each partition. The
+    * shuffle and the sort run inside the job that consumes the frame
+    * ([[InJobExchange]]): placing starts no job. */
   def place(df: DataFrame, n: Int): DataFrame =
-    df.repartition(n, col("br"), col("bc")).sortWithinPartitions("br", "bc")
+    InJobExchange.frame(InJobExchange.exchange(InJobExchange.rows(df),
+      df.schema, Key, n), df.schema, df)
+      .sortWithinPartitions(Key.map(col): _*)
+
+  private val Key = Seq("br", "bc")
 
   /** The runs of `it`, which is in block layout, as (block, rows)
     * pairs; `block` gives a row's block. Blocks must come in strictly
@@ -79,12 +94,17 @@ private[graft] object Blocks {
    * among cells that share a position (Spark's max order: NaN above
    * everything, -0.0 equal to 0.0 with the first seen kept).
    *
-   * One shuffle: each cell goes to its own block and, when it lies on
-   * a block edge, to each block whose one-cell halo holds it (at most
-   * four copies); the blocks are placed over [[partitions]] and each
-   * block fills a dense (Side + 2)^2 array and reads every target's
-   * neighbours from it. Values are copied, never computed, so every
-   * value type gathers exactly. The output is in block layout.
+   * One shuffle, run inside the job that consumes the output
+   * ([[InJobExchange]]), so building the gather starts no job: each
+   * cell goes to its own block and, when it lies on a block edge, to
+   * each block whose one-cell halo holds it (at most four copies),
+   * hash-placed on (br, bc) over [[partitions]] as [[place]] places
+   * rows. Each partition fills one dense (Side + 2)^2 array per block
+   * straight from the shuffled rows and emits its blocks in ascending
+   * (br, bc) order, each target's neighbours read off its block's
+   * array, targets in (r, c) order within a block. Rows stay Spark's
+   * internal rows throughout, and values are copied, never computed,
+   * so every value type gathers exactly. The output is in block layout.
    */
   def gather(grid: DataFrame, reflect: Boolean, nRows: Long,
              nCols: Long): DataFrame = {
@@ -99,42 +119,89 @@ private[graft] object Blocks {
     val keyed = StructType(Seq(StructField("br", LongType, false),
       StructField("bc", LongType, false), StructField("r", LongType, false),
       StructField("c", LongType, false), StructField("v", vType, false)))
-    val copies = src.flatMap { row =>
-      val (r, c, v) = (row.getLong(0), row.getLong(1), row.get(2))
-      for (vr <- mirrors(r, reflect, nRows); vc <- mirrors(c, reflect, nCols);
-           br <- halo(vr, nRows); bc <- halo(vc, nCols))
-        yield Row(br, bc, vr, vc, v)
-    }(Encoders.row(keyed))
     val out = StructType(Seq(StructField("r", LongType, false),
         StructField("c", LongType, false), StructField("v", vType, false)) ++
       (0 until 8).map(i => StructField(s"n$i", vType, true)))
-    val greater = greaterOf(vType)
-    place(copies, partitions(grid))
-      .mapPartitions(it => runs(it)(row => (row.getLong(0), row.getLong(1)))
-        .flatMap { case ((br, bc), rows) =>
-          stencil(br, bc, rows, greater, nRows, nCols)
-        })(Encoders.row(out))
+    val placed = InJobExchange.exchange(InJobExchange.rows(src)
+      .mapPartitions(copies(_, keyed, reflect, nRows, nCols)), keyed, Key,
+      partitions(grid))
+    InJobExchange.frame(placed.mapPartitions(stencils(_, out, nRows, nCols)),
+        out, grid)
       .select(Seq(col("r").cast(outType("r").dataType).as("r"),
         col("c").cast(outType("c").dataType).as("c"), col("v")) ++
         (0 until 8).map(i => col(s"n$i")): _*)
   }
 
-  /** The positions a cell at x is read from: x, plus its mirror image
-    * across the grid edge when `reflect` and x is an edge cell
-    * ([[Focal.contributions]]'s ghost copies at radius 1). */
-  private def mirrors(x: Long, reflect: Boolean, n: Long): Seq[Long] =
-    if (!reflect) Seq(x)
-    else Seq(x) ++ (if (x < 1) Seq(-x - 1) else Nil) ++
-      (if (x >= n - 1) Seq(2 * n - x - 1) else Nil)
+  /** Each cell (r, c, v) of `cells` as its copies (br, bc, r', c', v),
+    * rows of `keyed`: one per block whose cells or one-cell halo hold a
+    * position (r', c') the cell is read at ([[axis]]). One reused row,
+    * as Spark's operators emit theirs. */
+  private def copies(cells: Iterator[InternalRow], keyed: StructType,
+                     reflect: Boolean, nRows: Long,
+                     nCols: Long): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private val vType = keyed("v").dataType
+      private val (rPos, rBlk) = (new Array[Long](6), new Array[Long](6))
+      private val (cPos, cBlk) = (new Array[Long](6), new Array[Long](6))
+      private var nr, nc, i, j = 0
+      private val row = new SpecificInternalRow(keyed.fields.map(_.dataType))
+      private val project = UnsafeProjection.create(keyed)
+      def hasNext: Boolean = {
+        while (i == nr && cells.hasNext) {
+          val cell = cells.next()
+          nr = axis(cell.getLong(0), reflect, nRows, rPos, rBlk)
+          nc = axis(cell.getLong(1), reflect, nCols, cPos, cBlk)
+          if (nc == 0) nr = 0
+          i = 0
+          j = 0
+          row.update(4, cell.get(2, vType))
+        }
+        i < nr
+      }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("no more copies")
+        row.setLong(0, rBlk(i))
+        row.setLong(1, cBlk(j))
+        row.setLong(2, rPos(i))
+        row.setLong(3, cPos(j))
+        j += 1
+        if (j == nc) { j = 0; i += 1 }
+        project(row)
+      }
+    }
 
-  /** The blocks (along one axis) whose cells or one-cell halo hold
-    * position x, keeping only blocks that hold a target in [0, n). */
-  private def halo(x: Long, n: Long): Seq[Long] = {
-    val b = Math.floorDiv(x, Side)
-    val m = Math.floorMod(x, Side)
-    val bs = if (m == 0) Seq(b - 1, b) else if (m == Side - 1) Seq(b, b + 1)
-             else Seq(b)
-    bs.filter(k => k * Side + Side - 1 >= 0 && k * Side <= n - 1)
+  /** The copies of a cell at x along one axis, written to `pos` and
+    * `blk`: each position it is read at (x and, when `reflect`, its
+    * mirror image across a grid edge, [[Focal.contributions]]' ghost
+    * copies at radius 1) paired with each block whose cells or one-cell
+    * halo hold that position, keeping only blocks that hold a target in
+    * [0, n). Returns how many, at most six. */
+  private def axis(x: Long, reflect: Boolean, n: Long, pos: Array[Long],
+                   blk: Array[Long]): Int = {
+    var k = halo(x, n, pos, blk, 0)
+    if (reflect && x < 1) k = halo(-x - 1, n, pos, blk, k)
+    if (reflect && x >= n - 1) k = halo(2 * n - x - 1, n, pos, blk, k)
+    k
+  }
+
+  /** [[axis]] for one position p, written from index k on; returns the
+    * next free index. */
+  private def halo(p: Long, n: Long, pos: Array[Long], blk: Array[Long],
+                   k: Int): Int = {
+    val b = Math.floorDiv(p, Side)
+    val m = p - b * Side
+    var q = if (m == 0) b - 1 else b
+    val last = if (m == Side - 1) b + 1 else b
+    var next = k
+    while (q <= last) {
+      if (q * Side + Side - 1 >= 0 && q * Side <= n - 1) {
+        pos(next) = p
+        blk(next) = q
+        next += 1
+      }
+      q += 1
+    }
+    next
   }
 
   /** Spark's `max` order on one value type: strictly greater. */
@@ -148,26 +215,53 @@ private[graft] object Blocks {
     case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) > 0
   }
 
-  /** One block's targets: its cells and halo (br, bc, r, c, v) copied
-    * into a dense array, then each target's 8 neighbours read off it. */
-  private def stencil(br: Long, bc: Long, rows: Seq[Row],
-                      greater: (Any, Any) => Boolean, nRows: Long,
-                      nCols: Long): Iterator[Row] = {
+  /** One partition's targets, rows of `out`: its copies (br, bc, r, c,
+    * v) filled into one dense (Side + 2)^2 array per block, then the
+    * blocks in ascending order, each target's 8 neighbours read off its
+    * block's array. */
+  private def stencils(copies: Iterator[InternalRow], out: StructType,
+                       nRows: Long, nCols: Long): Iterator[InternalRow] = {
     val w = (Side + 2).toInt
-    val (r0, c0) = (br * Side - 1, bc * Side - 1) // array origin
-    val cells = new Array[Any](w * w)
-    rows.foreach { row =>
-      val k = (row.getLong(2) - r0).toInt * w + (row.getLong(3) - c0).toInt
-      val v = row.get(4)
+    val vType = out("v").dataType
+    val greater = greaterOf(vType)
+    val blocks = scala.collection.mutable.HashMap.empty[(Long, Long), Array[Any]]
+    var (br, bc, cells) = (0L, 0L, null: Array[Any])
+    copies.foreach { row =>
+      // copies of one block mostly come in runs: look it up on a change
+      if (cells == null || row.getLong(0) != br || row.getLong(1) != bc) {
+        br = row.getLong(0)
+        bc = row.getLong(1)
+        cells = blocks.getOrElseUpdate((br, bc), new Array[Any](w * w))
+      }
+      // array origin (br * Side - 1, bc * Side - 1)
+      val k = (row.getLong(2) - br * Side + 1).toInt * w +
+        (row.getLong(3) - bc * Side + 1).toInt
+      val v = InternalRow.copyValue(row.get(4, vType))
       if (cells(k) == null || greater(v, cells(k))) cells(k) = v
     }
     val dk = (0 until 8).map(i => Terrain.dY(i) * w + Terrain.dX(i)).toArray
-    for {
-      i <- (1 to Side.toInt).iterator
-      r = r0 + i if r >= 0 && r < nRows
-      j <- 1 to Side.toInt
-      c = c0 + j if c >= 0 && c < nCols
-      k = i * w + j if cells(k) != null
-    } yield Row.fromSeq(Seq(r, c, cells(k)) ++ dk.map(d => cells(k + d)))
+    val target = new SpecificInternalRow(out.fields.map(_.dataType))
+    val project = UnsafeProjection.create(out)
+    blocks.keys.toArray.sorted.iterator.flatMap { b =>
+      val cells = blocks.remove(b).get
+      val (r0, c0) = (b._1 * Side - 1, b._2 * Side - 1)
+      Iterator.range(1, w - 1).flatMap(i => Iterator.range(1, w - 1)
+          .map(j => i * w + j))
+        .filter { k =>
+          val (r, c) = (r0 + k / w, c0 + k % w)
+          r >= 0 && r < nRows && c >= 0 && c < nCols && cells(k) != null
+        }
+        .map { k =>
+          target.setLong(0, r0 + k / w)
+          target.setLong(1, c0 + k % w)
+          target.update(2, cells(k))
+          var d = 0
+          while (d < 8) {
+            target.update(3 + d, cells(k + dk(d)))
+            d += 1
+          }
+          project(target)
+        }
+    }
   }
 }

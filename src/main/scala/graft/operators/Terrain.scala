@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.InJobExchange
 
 import graft.core.Checkpoint
 
@@ -305,9 +306,10 @@ object Terrain {
    * Gather the 8 neighbour values as n0..n7 (null when unresolved)
    * plus the centre v, one row per cell with a value: one tile-and-halo
    * pass over blocks of the grid ([[Blocks.gather]]), whose rows come
-   * out in block layout. `reflect` mirrors out-of-grid reads at the
-   * edge like the reference's isReflectedAtEdges
-   * (WhiteboxRaster.java:535-557).
+   * out in block layout. Its one shuffle runs inside the job that
+   * consumes the output, so building the gather starts no job.
+   * `reflect` mirrors out-of-grid reads at the edge like the
+   * reference's isReflectedAtEdges (WhiteboxRaster.java:535-557).
    */
   private[operators] def gatherNeighbors(grid: DataFrame,
                                          reflect: Boolean = false,
@@ -634,16 +636,20 @@ object Terrain {
    * tiles are cut along block edges and stage 1 runs over each
    * partition's blocks with no shuffle. Stage 3 of that level reruns
    * each block's Kahn with the inflows that cross into it, placed in
-   * the same layout and zipped with the pointer grid partition by
-   * partition. Levels above it group their nodes by T^2 tile.
-   * The base case is one task over the whole forest, taken when the
-   * forest has at most [[localFixpointMaxRows]] nodes or fits in one
-   * tile. Level k + 1 holds at most (4T - 4) nodes per level-k tile,
-   * a bound taken from the extent of the top level (read from the
-   * footed pointer checkpoint's statistics, no job), so the number of
-   * Spark jobs depends only on the number of levels — one per
-   * squaring of T until a tile covers the grid — and not on how many
-   * tiles a flowpath crosses.
+   * the same layout ([[Blocks.place]]) and zipped with the pointer
+   * grid partition by partition. Levels above it group their nodes by
+   * T^2 tile. The base case is one task over the whole forest, taken
+   * when the forest has at most [[localFixpointMaxRows]] nodes or fits
+   * in one tile. The inflow placement runs inside the job that
+   * consumes the result
+   * ([[org.apache.spark.sql.graftbridge.InJobExchange]]): when the
+   * first level's perimeter forest fits the base case, the whole
+   * accumulation is one job, its checkpoint. Level k + 1 holds at
+   * most (4T - 4) nodes per level-k tile, a bound taken from the
+   * extent of the top level (read from the footed pointer checkpoint's
+   * statistics, no job), so the number of Spark jobs depends only on
+   * the number of levels — one per squaring of T until a tile covers
+   * the grid — and not on how many tiles a flowpath crosses.
    */
   def flowAccumD8(grid: DataFrame, tileSize: Int = ForestTile): DataFrame =
     d8Forest(grid, tileSize).select("r", "c", "n_upslope")
@@ -760,19 +766,17 @@ object Terrain {
         .flatMap { case (_, block) => FlowForest.blockPerimeter(block, t) })
     val solved = accumulateForest(perimeter,
       math.min(rows, tiles * (4 * t - 4)), extent, Math.multiplyExact(t, t))
-    val nodes = cells.rdd
-    val inflow = Blocks.place(solved
+    // both sides are read in the job that consumes the result, with
+    // no job or SQL execution of their own
+    val nodes = InJobExchange.objects(cells)
+    val inflow = InJobExchange.objects(Blocks.place(solved
         .filter(f => f.link && Blocks.of(f.tr, f.tc) != Blocks.of(f.r, f.c))
         .map { f =>
           val (br, bc) = Blocks.of(f.tr, f.tc)
           (br, bc, f)
         }.toDF("br", "bc", "f"), nodes.getNumPartitions)
-      .select("f.*").as[FlowNode].rdd
-    // a shuffle of no rows leaves no partitions to zip with
-    spark.createDataset(
-      if (inflow.getNumPartitions == 0)
-        nodes.mapPartitions(FlowForest.accumulateBlocks(_, Iterator.empty))
-      else nodes.zipPartitions(inflow)(FlowForest.accumulateBlocks))
+      .select("f.*").as[FlowNode])
+    spark.createDataset(nodes.zipPartitions(inflow)(FlowForest.accumulateBlocks))
   }
 
   /**

@@ -38,12 +38,12 @@ class BuildJobsSpec extends AnyFunSuite {
       .foreach(q => assert(buildJobs(q) === 0, q))
   }
 
-  test("geo_flow_accum builds with at most 3 jobs") {
-    // the pointer checkpoint (neighbour shuffle + result) and the
-    // accumulation's checkpoint; count and extent come from the
+  test("geo_flow_accum builds with at most 2 jobs") {
+    // the pointer checkpoint, whose job runs the neighbour shuffle, and
+    // the accumulation's checkpoint; count and extent come from the
     // pointer checkpoint's statistics
     val jobs = buildJobs("geo_flow_accum")
-    assert(jobs <= 3, s"$jobs jobs")
+    assert(jobs <= 2, s"$jobs jobs")
   }
 
   test("knnJoin's broadcast arm builds with at most 1 job") {

@@ -140,7 +140,7 @@ class FixpointSpec extends AnyFunSuite {
     assert(jobs.head == jobs.last, s"jobs per grid side 40, 60: $jobs")
   }
 
-  test("flow accumulation: a 256^2 DEM takes 4 jobs, D8 pointer included") {
+  test("flow accumulation: a 256^2 DEM takes 2 jobs, D8 pointer included") {
     // ridges whose basins send flowpaths across many tiles and blocks,
     // plus seeded noise that breaks slope ties
     val side = 256
@@ -153,13 +153,14 @@ class FixpointSpec extends AnyFunSuite {
         10.0 * (x + 0.5 * y) + (h >>> 11).toDouble / (1L << 53) * 0.05)
     }.toDF("r", "c", "v").localCheckpoint(true)
     var acc: DataFrame = null
-    // the pointer: neighbour shuffle and checkpoint; the accumulation:
-    // the shuffle of the inflows between blocks and the checkpoint
+    // one checkpoint job each: the pointer's neighbour shuffle and the
+    // accumulation's shuffle of the inflows between blocks run as
+    // stages of those jobs
     val jobs = withMaxRows(10000L)(JobCount(spark.sparkContext) {
       Terrain.d8Pointer(dem)
       acc = Terrain.flowAccumD8(dem)
     })
-    assert(jobs === 4)
+    assert(jobs === 2)
     assertSameAccum(acc.collect().map(x => (x.getLong(0), x.getLong(1)) ->
       x.getLong(2)).toMap, withMaxRows(Long.MaxValue)(flowAccum(dem)), "256^2")
   }
